@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Literal, Lower}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,13 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * round-trip (the flatMap deserializes every row to a case class and
   * re-encodes every output), and upstream column pruning still works
   * because the generator declares exactly one required child column.
-  * Tokenization is pinned to the corpus-wide rule (lowercase, split on
-  * non-letters, drop empties) so results are bit-identical to the flatMap
-  * formulation and to the DuckDB oracle's `string_split_regex`.
   *
-  * Per-row work is O(prefix scanned): the split stops being consumed after
-  * `n` words (iterator semantics), so pathological multi-MB documents do
-  * not pay full-text tokenization here.
+  * `child` is the LOWERCASED text: the builders wrap the caller's column in
+  * Spark's `lower`, so case folding never depends on the JVM's default
+  * locale, and the words are the corpus-wide [[Words]] scan — the same
+  * rule as `words(lower(text))` and the DuckDB oracle's
+  * `string_split_regex`. The scan stops after `n` words.
   */
 case class FirstNWords(child: Expression, n: Expression)
     extends Generator with CodegenFallback {
@@ -49,15 +48,8 @@ case class FirstNWords(child: Expression, n: Expression)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val raw = child.eval(input)
     if (raw == null) Nil
-    else {
-      // iterator pipeline: tokenization halts once `limit` words are taken
-      raw.asInstanceOf[UTF8String].toString.toLowerCase
-        .split("[^a-z]+").iterator
-        .filter(_.nonEmpty).take(limit).zipWithIndex
-        .map { case (w, i) =>
-          InternalRow(UTF8String.fromString(w), (i + 1).toLong)
-        }
-    }
+    else Words.scan(raw.asInstanceOf[UTF8String], limit).iterator.zipWithIndex
+      .map { case (w, i) => InternalRow(w, (i + 1).toLong) }
   }
 
   override protected def withNewChildrenInternal(
@@ -71,12 +63,12 @@ object FirstNWords {
     if (exprs.length != 2)
       throw new IllegalArgumentException(
         s"first_n_words expects exactly 2 arguments (text, n), got ${exprs.length}")
-    FirstNWords(exprs.head, exprs(1))
+    FirstNWords(Lower(exprs.head), exprs(1))
   }
 
   /** `first_n_words(text, n)` as a Column — use in a select like
     * `explode`; alias the two outputs with `.as(Seq("word", "position"))`. */
   def firstNWords(text: Column, n: Int): Column =
     GraftColumnBridge.column(
-      FirstNWords(GraftColumnBridge.expression(text), Literal(n)))
+      FirstNWords(Lower(GraftColumnBridge.expression(text)), Literal(n)))
 }

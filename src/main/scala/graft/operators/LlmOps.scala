@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.functions.TextFunctions.{wordNgrams, words}
 import graft.functions.VectorFunctions.floatDot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -47,23 +48,6 @@ object LlmOps {
     floatDot(col(s"$a.embedding"), col(s"$b.embedding")) /
       (col(s"$a.norm") * col(s"$b.norm"))
 
-  /** DISTINCT word-3-gram shingles per document as `(doc_id, shingle)`
-    * rows: lowercase, split on non-letters, 3-token windows joined by one
-    * space. The tokenizer and shingle arity are pinned by SURVEY §2.J and
-    * shared by j2 (which hashes the strings) and l9 (which joins them
-    * raw) — change it HERE only, and keep LshSpec.shingles in sync.
-    * Shingling happens inside the row (array expr, no explode-then-window):
-    * the token stream never leaves its doc, so it costs ZERO shuffle.
-    *
-    * Deliberately a LAZY PLAN, not a [[graft.Tables.sharedFrame]]: r13
-    * measured the materialize-once-and-share variant and it LOSES 36% on
-    * the consumer family (9.9 s → 13.5 s). The shingle stream is the
-    * inverse of l9's shared pair frame on the recompute-vs-reuse axis:
-    * CHEAP to recompute (codegen'd split+explode fused into each
-    * consumer's scan, per-consumer pruning/fusion intact) and FAT to
-    * store (hundreds of thousands of exploded string rows whose
-    * checkpoint blocks every consumer must deserialize). Share
-    * expensive-tiny frames; recompute cheap-fat ones. */
   /** j2's LSH geometry: 12 bands × 2 minhashes, P(candidate) =
     * 1 − (1 − J²)¹² — ~0.92 at J = 0.5, ~0.06 per-band noise floor on
     * unrelated docs. Named so the oracle comment, the key, and the plan
@@ -92,17 +76,27 @@ object LlmOps {
       .distinct()
   }
 
+  /** DISTINCT word-3-gram shingles per document as `(doc_id, shingle)`
+    * rows, in first-seen order within each document. Invariants shared by
+    * every consumer (j2, l9, l16, l17, l18, l22, l24, l32, l50):
+    *  - one tokenizer rule, `words(lower(text))` — the maximal `[a-z]`
+    *    runs (SURVEY §2.J); `LshSpec.shingles` mirrors it;
+    *  - 3-word shingles joined by one space; documents under 3 words
+    *    have none;
+    *  - shingling stays inside the row (`word_ngrams` over the doc's own
+    *    array), so the token stream never crosses a shuffle.
+    *
+    * It stays a LAZY PLAN, not a [[graft.Tables.sharedFrame]]: the stream
+    * is cheap to recompute (a native per-row scan fused into each
+    * consumer's documents scan, with that consumer's pruning intact) and
+    * fat to store (hundreds of thousands of exploded string rows that
+    * every consumer would have to deserialize). */
   private[graft] def shingleRows(s: SparkSession, d: String): DataFrame = {
-    val ws = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
     t(s, d, "documents")
-      .select(col("doc_id"), ws.as("ws"))
+      .select(col("doc_id"), words(lower(col("text"))).as("ws"))
       .filter(size(col("ws")) >= 3)
       .select(col("doc_id"),
-        explode(array_distinct(transform(sequence(lit(0), size(col("ws")) - 3),
-          i => concat_ws(" ",
-            element_at(col("ws"), i + 1),
-            element_at(col("ws"), i + 2),
-            element_at(col("ws"), i + 3))))).as("shingle"))
+        explode(array_distinct(wordNgrams(col("ws"), 3))).as("shingle"))
   }
 
   /** Row cap for the exact all-pairs baselines that `broadcast()` a whole

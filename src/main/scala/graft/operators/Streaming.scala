@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables._
+import graft.functions.TextFunctions.words
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -786,7 +787,7 @@ object Streaming {
         StructField("n_chars", LongType)))
       val stream = s.readStream.schema(docsSchema)
         .option("basePath", d).parquet(s"$d/documents.parquet*")
-      val ws = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
+      val ws = words(lower(col("text")))
       val gated = stream
         .select(col("doc_id"), ws.as("ws"))
         .select(col("doc_id"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables._
 import graft.functions.JaroWinkler.jaroWinkler
+import graft.functions.TextFunctions.{maxMultiplicity, wordNgrams, words}
 import graft.functions.VectorFunctions.floatDot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -704,21 +705,12 @@ object TrainOps {
             + lit(0.3) * least(lit(1.0), col("n_tokens") / 100.0)
             + lit(0.3) * least(lit(1.0),
               col("len_sum").cast(DoubleType) / col("n_tokens") / 8.0)).as("xq"))
-      val ws = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-      def grams(n: Int) = transform(sequence(lit(0), size(col("ws")) - n),
-        i => concat_ws(" ", (0 until n).map(k => element_at(col("ws"), i + k + 1)): _*))
+      val ws = words(lower(col("text")))
       val rep = t(s, d, "documents").select(col("doc_id"), ws.as("ws"))
         .filter(size(col("ws")) >= 3) // trigram feature needs ≥ 3 tokens
-        .withColumn("bgs", grams(2))
-        .withColumn("tgs", grams(3))
-        .withColumn("top_bi", aggregate(array_sort(col("bgs")),
-          struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-          (acc, x) => {
-            val run = when(x === acc("prev"), acc("run") + 1L).otherwise(lit(1L))
-            struct(x.as("prev"), run.as("run"),
-              greatest(acc("best"), run).as("best"))
-          },
-          acc => acc("best")))
+        .withColumn("bgs", wordNgrams(col("ws"), 2))
+        .withColumn("tgs", wordNgrams(col("ws"), 3))
+        .withColumn("top_bi", maxMultiplicity(col("bgs")))
         .select(col("doc_id"),
           (col("top_bi").cast(DoubleType) / size(col("bgs"))).as("xbi"),
           (lit(1.0) - size(array_distinct(col("tgs"))).cast(DoubleType)
@@ -1271,37 +1263,21 @@ object TrainOps {
     // repeated trigrams, symbol-to-char ratio; keep = top-bigram ≤ 0.08
     // AND dup-trigram ≤ 0.05 (thresholds pinned to this corpus's p90).
     // ZERO-shuffle shape (same lesson as j2/l9's in-row shingling): the
-    // n-gram stream never leaves its row — bigrams/trigrams are array
-    // exprs, top-bigram multiplicity is an in-row sort + run-length
-    // aggregate, dup-trigram is 1 − distinct/total on the array.
+    // n-gram stream never leaves its row — bigrams/trigrams come from
+    // the native `word_ngrams`, top-bigram multiplicity from the native
+    // `max_multiplicity`, dup-trigram is 1 − distinct/total on the array.
     // Embarrassingly parallel map + the contract's final sort; nothing
-    // to skew, nothing to spill. Measured tradeoff at sf0.1: 2.3 s here
-    // vs 1.6 s for an explode→window→groupBy formulation — HOFs are
-    // interpreted while explode pipelines are codegen'd — but the
-    // exploded shape ships every (doc_id, gram) pair through TWO window/
-    // agg shuffles (~20× row amplification); at corpus scale the
-    // network-free map wins, so the in-row shape is the keeper.
+    // to skew, nothing to spill. An explode→window→groupBy formulation
+    // would ship every (doc_id, gram) pair through TWO window/agg
+    // shuffles (~20× row amplification).
     "l14_repetition_filter" -> ((s, d) => {
-      val ws = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-      def grams(n: Int) = transform(sequence(lit(0), size(col("ws")) - n),
-        i => concat_ws(" ", (0 until n).map(k => element_at(col("ws"), i + k + 1)): _*))
+      val ws = words(lower(col("text")))
       val perDoc = t(s, d, "documents")
         .select(col("doc_id"), col("text"), ws.as("ws"))
         .filter(size(col("ws")) >= 3) // need a trigram, like the oracle's inner join
-        .withColumn("bgs", grams(2))
-        .withColumn("tgs", grams(3))
-        // max bigram multiplicity = longest equal-run in the SORTED array:
-        // one O(n log n) sort + one linear aggregate pass per row (the
-        // count-per-distinct formulation nests a full array scan per
-        // distinct gram — O(distinct·n) string compares, measurably worse)
-        .withColumn("top_bi", aggregate(array_sort(col("bgs")),
-          struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-          (acc, x) => {
-            val run = when(x === acc("prev"), acc("run") + 1L).otherwise(lit(1L))
-            struct(x.as("prev"), run.as("run"),
-              greatest(acc("best"), run).as("best"))
-          },
-          acc => acc("best")))
+        .withColumn("bgs", wordNgrams(col("ws"), 2))
+        .withColumn("tgs", wordNgrams(col("ws"), 3))
+        .withColumn("top_bi", maxMultiplicity(col("bgs")))
         .withColumn("sym_ratio",
           (length(col("text")) -
             length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", "")))
@@ -1591,9 +1567,8 @@ object TrainOps {
     // DISTINCT documents; dup_frac = duplicated positions / positions.
     // 8-gram positional shingles are built IN-ROW (the shingleRows
     // lesson: the token stream never leaves its doc, zero shuffle to
-    // shingle), with the l43-proven guard on short docs (sequence(0, n)
-    // DESCENDS for n < 0 — docs under 8 tokens shingle to empty, and
-    // drop from the output on both engines identically).
+    // shingle); docs under 8 words have no 8-gram (`word_ngrams` returns
+    // `[]`) and drop from the output on both engines identically.
     //
     // Scale shape: one gram-keyed agg whose output is bounded by
     // DISTINCT GRAMS (map-side combinable; the partial-agg dedups
@@ -1610,10 +1585,8 @@ object TrainOps {
     "l46_dup_span_fraction" -> ((s, d) => {
       val grams = t(s, d, "documents")
         .select(col("doc_id"),
-          expr("filter(split(lower(text), '[^a-z]+'), x -> x != '')").as("w"))
-        .select(col("doc_id"), explode(when(size(col("w")) >= 8,
-            expr("transform(sequence(0, size(w) - 8), i -> array_join(slice(w, i + 1, 8), ' '))"))
-          .otherwise(array().cast("array<string>"))).as("gram"))
+          words(lower(col("text"))).as("w"))
+        .select(col("doc_id"), explode(wordNgrams(col("w"), 8)).as("gram"))
         .select(col("doc_id"), xxhash64(col("gram")).as("g"))
       val df = grams.groupBy("g")
         .agg(countDistinct(col("doc_id")).as("nd"))
@@ -2057,9 +2030,9 @@ object TrainOps {
         "breaking news and special announcements thank you for reading"
       val gate = substring(md5(col("doc_id").cast(StringType)
         .cast(BinaryType)), 1, 1) < "8"
-      val ws = filter(split(lower(
+      val ws = words(lower(
         when(gate, concat(col("text"), lit(" " + boiler)))
-          .otherwise(col("text"))), "[^a-z]+"), x => x =!= "")
+          .otherwise(col("text"))))
       val toks = t(s, d, "documents")
         .select(col("doc_id"), posexplode(ws).as(Seq("pos", "term")))
       val w = Window.partitionBy("doc_id").orderBy("pos")
@@ -2226,17 +2199,12 @@ object TrainOps {
     // would produce.
     "l33_select_dsir" -> ((s, d) => {
       val tgtSrcs = Seq("src0", "src1", "src2", "src3", "src4")
-      val ws = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
+      val ws = words(lower(col("text")))
       val grams = t(s, d, "documents")
         .select(col("doc_id"), col("source"), ws.as("ws"))
         .filter(size(col("ws")) >= 1)
         .select(col("doc_id"), col("source"),
-          explode(concat(col("ws"),
-            when(size(col("ws")) >= 2,
-              transform(sequence(lit(0), size(col("ws")) - 2),
-                i => concat_ws(" ",
-                  element_at(col("ws"), i + 1), element_at(col("ws"), i + 2))))
-              .otherwise(array().cast("array<string>")))).as("gram"))
+          explode(concat(col("ws"), wordNgrams(col("ws"), 2))).as("gram"))
         .select(col("doc_id"), col("source"),
           (conv(substring(md5(col("gram").cast(BinaryType)), 1, 6), 16, 10)
             .cast(LongType) % 64).as("bkt"))
@@ -2607,8 +2575,7 @@ object TrainOps {
     // anywhere, which is the whole point of hashing features at 100 TB.
     "l41_feature_hashing" -> ((s, d) =>
       t(s, d, "documents")
-        .select(explode(filter(split(lower(col("text")), "[^a-z]+"),
-          x => x =!= "")).as("term"))
+        .select(explode(words(lower(col("text")))).as("term"))
         .withColumn("bucket", substring(md5(col("term").cast(BinaryType)), 1, 1))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_tokens"),

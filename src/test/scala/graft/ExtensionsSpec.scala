@@ -35,7 +35,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val flat = graft.Tables.t(spark, sfTiny, "documents")
       .select("doc_id", "text").as[(Long, String)]
       .flatMap { case (id, text) =>
-        text.toLowerCase.split("[^a-z]+").iterator
+        text.toLowerCase(java.util.Locale.ROOT).split("[^a-z]+").iterator
           .filter(_.nonEmpty).take(5).zipWithIndex
           .map { case (w, i) => (id, w, (i + 1).toLong) }
       }
@@ -46,6 +46,24 @@ class ExtensionsSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(gen == flat,
       s"Generator diverges from flatMap baseline: ${gen.size} vs ${flat.size} rows")
+  }
+
+  test("k3: tokenization does not depend on the JVM's default locale") {
+    import spark.implicits._
+    // under tr_TR, String.toLowerCase maps 'I' to dotless 'ı', which the
+    // [a-z] rule treats as a delimiter; Spark's lower and the DuckDB
+    // oracle both give plain 'i'
+    val dir = tmpDir("k3_locale")
+    Seq((1L, "TITLE INDIGO Is Here", "en", "src0", 20L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      val got = SparkEntry.queries("k3_udtf_generator")(spark, dir)
+        .collect().map(r => r.getString(1)).toSeq
+      assert(got == Seq("title", "indigo", "is", "here"), s"k3 under tr_TR: $got")
+    } finally java.util.Locale.setDefault(saved)
   }
 
   test("k3: plans through GenerateExec and prunes the scan to doc_id/text") {

@@ -10,7 +10,7 @@ class LshSpec extends AnyFunSuite {
   import TestSpark._
 
   private def shingles(text: String): Set[Seq[String]] = {
-    val ws = text.toLowerCase.split("[^a-z]+").filter(_.nonEmpty).toSeq
+    val ws = text.toLowerCase(java.util.Locale.ROOT).split("[^a-z]+").filter(_.nonEmpty).toSeq
     ws.sliding(3).filter(_.size == 3).map(_.toSeq).toSet
   }
 

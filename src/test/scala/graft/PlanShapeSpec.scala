@@ -718,4 +718,20 @@ class PlanShapeSpec extends AnyFunSuite {
       "l_quantity:double,l_extendedprice:double>"),
       s"scan not pruned to the 4 base columns:\n$p")
   }
+
+  test("tokenizer sites plan no interpreted higher-order function") {
+    // words / word_ngrams / max_multiplicity are native expressions; a
+    // lambda (filter, transform, aggregate, array_sort) in these plans
+    // means the per-element interpreted path came back
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    val frames = Seq(
+      "shingleRows" -> graft.operators.LlmOps.shingleRows(spark, sfTiny)) ++
+      Seq("l14_repetition_filter", "l17_pipeline_corpus_prep", "l46_dup_span_fraction")
+        .map(k => k -> SparkEntry.queries(k)(spark, sfTiny))
+    frames.foreach { case (name, df) =>
+      val hofs = df.queryExecution.analyzed.collectWithSubqueries { case p => p }
+        .flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h.prettyName }))
+      assert(hofs.isEmpty, s"$name plans interpreted higher-order functions: $hofs")
+    }
+  }
 }
