@@ -376,11 +376,12 @@ object ScaleSmoke {
         stream.withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
       else operators.Streaming.tumblingAgg(stream)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    if (key.startsWith("i11") || key.startsWith("i12")) spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    val rocks =
+      if (key.startsWith("i11") || key.startsWith("i12"))
+        Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil
+    Tables.withConf(spark)(rocks: _*) {
       val name = s"smoke_${key}_x$factor"
       // i14 probes the LAKE leg: same tumblingAgg state question, but the
       // finalized windows publish through ParquetDirSink — one epoch per
@@ -445,11 +446,6 @@ object ScaleSmoke {
           "length, not the watermark horizon")
       s"""{"sec":$sec,"max_state_rows":$maxState,"rows_removed":$removed,""" +
         s""""rows_emitted":$emitted,"rocksdb_mem_bytes":$rocksMem}"""
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
     }
   }
 }

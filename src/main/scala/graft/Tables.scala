@@ -372,6 +372,78 @@ object Tables {
     f.delete(): Unit
   }
 
+  /** Seed table for the catalog fixtures: the orders rows (only keys
+    * below `below`, if given) as `k,st,total` lines in key order, cut
+    * into `parts` CSV files named `part-<i>-<first k>-<last k>.csv` —
+    * the k-range stats the catalog connectors prune on. Fixture builds
+    * only: it collects every row into this JVM. */
+  def seedOrdersCsv(s: SparkSession, d: String, dir: String,
+      below: Option[Long], parts: Int = 4): Unit = {
+    val out = new java.io.File(dir); out.mkdirs()
+    val orders = t(s, d, "orders")
+    val rows = below.fold(orders)(k => orders.filter(col("o_orderkey") < k))
+      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+      .orderBy("o_orderkey").collect()
+    val per = math.max(1, math.ceil(rows.length / parts.toDouble).toInt)
+    rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
+      val lines = chunk.map(r =>
+        s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
+      java.nio.file.Files.write(
+        new java.io.File(out,
+          s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
+        java.util.Arrays.asList(lines: _*))
+    }
+  }
+
+  /** Run `body` with the SQL conf `kvs` set on `s`, then put every key
+    * back exactly as it was found: a key that had an explicitly set value
+    * gets that value again, a key that had none is unset (so it reads
+    * Spark's default again, not a guessed one). A plain try/finally: it
+    * does not force the body's plan, so a body whose result must run
+    * under these settings materialises it inside the scope.
+    *
+    * SEQUENTIAL-EXECUTION ASSUMPTION: the conf is session-global, so the
+    * scope is only safe because the Verify/Bench/test harnesses run one
+    * query at a time on the shared session. Two queries interleaving on
+    * one session could capture each other's values and strand the
+    * session there. If concurrent execution is ever introduced, scope
+    * the override per query instead (a cloned `spark.newSession` sharing
+    * the state, or a query-level option). */
+  def withConf[T](s: SparkSession)(kvs: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Register the V2 catalog `cls` as `<prefix>_<hash of root>` with its
+    * `.root` option, and return the name. Idempotent: an entry already
+    * present is kept (Spark caches a catalog by name once loaded, so a
+    * re-set would not take effect anyway) and must agree with this call.
+    * Registrations live for the session, because `s.table(cat…)` plans
+    * lazily. */
+  def catalog(s: SparkSession, prefix: String, cls: Class[_], root: String): String = {
+    val name = catalog(s, s"${prefix}_${Integer.toHexString(root.hashCode)}", cls)
+    setOnce(s, s"spark.sql.catalog.$name.root", root)
+    name
+  }
+
+  /** Register `cls` under the fixed catalog `name` (no options). */
+  def catalog(s: SparkSession, name: String, cls: Class[_]): String = {
+    setOnce(s, s"spark.sql.catalog.$name", cls.getName)
+    name
+  }
+
+  private def setOnce(s: SparkSession, k: String, v: String): Unit =
+    s.conf.getOption(k) match {
+      case None => s.conf.set(k, v)
+      case Some(old) => require(old == v, s"$k is already $old, not $v")
+    }
+
   /** Cast to decimal for exact money math (internal only — see dbl). */
   def dec(c: Column, p: Int, s: Int): Column = c.cast(DecimalType(p, s))
 

@@ -208,8 +208,7 @@ object Extensions {
     // exact, so partial aggregation map-side combines like a built-in
     // and the result is partition-order-proof by construction.
     "k10_catalog_v2_function" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graft_fn",
-        classOf[graft.functions.GraftFunctionCatalog].getName)
+      catalog(s, "graft_fn", classOf[graft.functions.GraftFunctionCatalog])
       t(s, d, "orders").createOrReplaceTempView("k10_orders")
       val bad = scala.util.Try(s.sql(
         "SELECT graft_fn.math.gcd(o_orderstatus, o_custkey) FROM k10_orders")

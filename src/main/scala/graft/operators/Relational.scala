@@ -27,24 +27,9 @@ object Relational {
     // [1500,3000) for the insert — empty at sf0.001, which silently
     // skipped the v2 snapshot and broke VERSION AS OF 2 at that tier)
     val root = cachedFixture(s, d, "a27_tt_v2") { p =>
-      val dir = new java.io.File(p, "orders_tt"); dir.mkdirs()
-      val rows = t(s, d, "orders").filter(col("o_orderkey") < 1200)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-      val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-      rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-        val lines = chunk.map(r =>
-          s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-        java.nio.file.Files.write(
-          new java.io.File(dir,
-            s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-          java.util.Arrays.asList(lines: _*))
-      }
+      seedOrdersCsv(s, d, s"$p/orders_tt", Some(1200))
     }
-    val cat = s"graft_tt_${Integer.toHexString(root.hashCode)}"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.CowDeleteCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = catalog(s, "graft_tt", classOf[graft.sources.CowDeleteCatalog], root)
     val dir = new java.io.File(root, "orders_tt")
     // per-mutation version-count guards: a crash mid-history resumes at
     // the missing step instead of wedging the fixture at a partial state
@@ -464,24 +449,9 @@ object Relational {
     // longer intersect, so the second delete touches nothing.
     "a25_catalog_cow_delete" -> ((s, d) => {
       val root = cachedFixture(s, d, "a25_cow") { p =>
-        val dir = new java.io.File(p, "orders_cow"); dir.mkdirs()
-        val rows = t(s, d, "orders")
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 8.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_cow", None, parts = 8)
       }
-      val cat = s"graft_cow_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.CowDeleteCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_cow", classOf[graft.sources.CowDeleteCatalog], root)
       val dir = new java.io.File(root, "orders_cow")
       // files provably outside the predicate, with their pre-delete state
       val untouchable = graft.sources.CowTable.manifest(dir)
@@ -526,26 +496,11 @@ object Relational {
     // post-evolution files.
     "a26_catalog_schema_evolution" -> ((s, d) => {
       val root = cachedFixture(s, d, "a26_evo") { p =>
-        val dir = new java.io.File(p, "orders_evo"); dir.mkdirs()
-        val rows = t(s, d, "orders").filter(col("o_orderkey") < 3000)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_evo", Some(3000))
         // fresh fixture ⇒ no leftover sidecar/inserted files from a
         // previous session's run (cachedFixture reuses the dir)
       }
-      val cat = s"graft_evo_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.CowDeleteCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_evo", classOf[graft.sources.CowDeleteCatalog], root)
       val dir = new java.io.File(root, "orders_evo")
       // idempotent re-run: evolution + insert happen once per fixture
       val already = graft.sources.CowTable.addedColumns(dir).nonEmpty
@@ -645,24 +600,9 @@ object Relational {
     // emitted as double (§7.2).
     "a29_catalog_update_exec" -> ((s, d) => {
       val root = cachedFixture(s, d, "a29_upd") { p =>
-        val dir = new java.io.File(p, "orders_upd"); dir.mkdirs()
-        val rows = t(s, d, "orders").filter(col("o_orderkey") < 1200)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_upd", Some(1200))
       }
-      val cat = s"graft_upd_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.CowDeleteCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_upd", classOf[graft.sources.CowDeleteCatalog], root)
       val dir = new java.io.File(root, "orders_upd")
       // guard each mutation on the VERSION COUNT, not on "versioning
       // enabled" — a crash between enable and the mutation must retry
@@ -702,24 +642,9 @@ object Relational {
     // target k < 300.
     "a30_catalog_merge_exec" -> ((s, d) => {
       val root = cachedFixture(s, d, "a30_mrg") { p =>
-        val dir = new java.io.File(p, "orders_mrg"); dir.mkdirs()
-        val rows = t(s, d, "orders").filter(col("o_orderkey") < 1200)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_mrg", Some(1200))
       }
-      val cat = s"graft_mrg_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.CowDeleteCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_mrg", classOf[graft.sources.CowDeleteCatalog], root)
       val dir = new java.io.File(root, "orders_mrg")
       graft.sources.CowVersions.enable(dir) // v0 (idempotent)
       if (graft.sources.CowVersions.read(dir).map(_._1).max == 0L) {
@@ -769,24 +694,9 @@ object Relational {
     // rewrote files to the right answer would still fail the gates.
     "a31_catalog_mor_dml" -> ((s, d) => {
       val root = cachedFixture(s, d, "a31_mor") { p =>
-        val dir = new java.io.File(p, "orders_mor"); dir.mkdirs()
-        val rows = t(s, d, "orders").filter(col("o_orderkey") < 1200)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_mor", Some(1200))
       }
-      val cat = s"graft_mor_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.MorDeltaCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_mor", classOf[graft.sources.MorDeltaCatalog], root)
       val dir = new java.io.File(root, "orders_mor")
       // idempotence guard = the delta log itself (one file per
       // committed statement); re-runs on a cached fixture skip
@@ -855,24 +765,9 @@ object Relational {
     // still show the deleted rows.
     "a33_catalog_mor_travel" -> ((s, d) => {
       val root = cachedFixture(s, d, "a33_mtt") { p =>
-        val dir = new java.io.File(p, "orders_mt"); dir.mkdirs()
-        val rows = t(s, d, "orders").filter(col("o_orderkey") < 1200)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_mt", Some(1200))
       }
-      val cat = s"graft_mtt_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.MorDeltaCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_mtt", classOf[graft.sources.MorDeltaCatalog], root)
       val dir = new java.io.File(root, "orders_mt")
       if (graft.sources.MorDeltas.deltaFiles(dir).isEmpty) {
         s.sql(s"DELETE FROM $cat.orders_mt WHERE k % 10 = 7") // -> v1
@@ -915,11 +810,8 @@ object Relational {
     // this is the fact-fact join that moves ZERO rows over the
     // network because the lake layout already clusters both sides.
     "c23_join_storage_partitioned" -> ((s, d) => {
-      val prevBucket = s.conf.get("spark.sql.sources.v2.bucketing.enabled", "false")
-      val prevBroadcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      withConf(s)("spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         def src(rows: Int) = s.read.format("graft.sources.BucketedSource")
           .option("groups", "8").option("rowsPerGroup", rows.toString).load()
         val a = src(2000)
@@ -968,9 +860,6 @@ object Relational {
         // version-dependent pin, so the key gates only the POSITIVE
         // claims above, which are the feature's contract.
         joined
-      } finally {
-        s.conf.set("spark.sql.sources.v2.bucketing.enabled", prevBucket)
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
       }
     }),
 
@@ -1033,24 +922,9 @@ object Relational {
     // the dim, read only the matching fact files.
     "c24_join_runtime_file_prune" -> ((s, d) => {
       val root = cachedFixture(s, d, "c24_rfp") { p =>
-        val dir = new java.io.File(p, "orders_rf"); dir.mkdirs()
-        val rows = t(s, d, "orders").filter(col("o_orderkey") < 1200)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_rf", Some(1200))
       }
-      val cat = s"graft_rfp_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.CowDeleteCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_rfp", classOf[graft.sources.CowDeleteCatalog], root)
       // the dim: a SELECTIVE predicate over the parquet source (the
       // dynamic-pruning rule requires one) whose keys all sit inside
       // file 0's [.., 299] stats range
@@ -1097,24 +971,9 @@ object Relational {
     // leg's must NOT be) and both are oracled.
     "a35_scan_agg_pushdown" -> ((s, d) => {
       val root = cachedFixture(s, d, "a35_agg") { p =>
-        val dir = new java.io.File(p, "orders_ap"); dir.mkdirs()
-        val rows = t(s, d, "orders").filter(col("o_orderkey") < 1200)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_ap", Some(1200))
       }
-      val cat = s"graft_ap_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.CowDeleteCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_ap", classOf[graft.sources.CowDeleteCatalog], root)
       def scansOf(df: org.apache.spark.sql.DataFrame) = {
         val phys = df.queryExecution.executedPlan
         val p = phys match {
@@ -1161,10 +1020,7 @@ object Relational {
     // half-refreshed state.
     "a34_catalog_rtas_atomic" -> ((s, d) => {
       val root = cachedFixture(s, d, "a34_rtas") { _ => () }
-      val cat = s"graft_rtas_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.CowDeleteCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_rtas", classOf[graft.sources.CowDeleteCatalog], root)
       t(s, d, "orders").createOrReplaceTempView("a34_src")
       val tbl = new java.io.File(root, "orders_rt")
       // slices pinned INSIDE every tier's contiguous key range (the
@@ -1235,10 +1091,7 @@ object Relational {
     // failed 3-hour job never leaves a half-table for readers.
     "a32_catalog_ctas_atomic" -> ((s, d) => {
       val root = cachedFixture(s, d, "a32_ctas") { _ => () }
-      val cat = s"graft_ctas_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.CowDeleteCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_ctas", classOf[graft.sources.CowDeleteCatalog], root)
       t(s, d, "orders").createOrReplaceTempView("a32_src")
       val tbl = new java.io.File(root, "orders_ctas")
       if (!tbl.isDirectory) {
@@ -1351,10 +1204,7 @@ object Relational {
       // nothing, flags nothing, drops nothing). Malformed-row semantics
       // are a WHOLE-ROW property, so pin pruning off for this key and
       // materialize under the pinned conf (the l39 idiom).
-      val pruneKey = "spark.sql.csv.parser.columnPruning.enabled"
-      val prev = s.conf.get(pruneKey)
-      s.conf.set(pruneKey, "false")
-      try {
+      withConf(s)("spark.sql.csv.parser.columnPruning.enabled" -> "false") {
         val permissive = s.read.schema(schema)
           .option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", "_bad")
           .csv(s"$path/clean")
@@ -1377,7 +1227,7 @@ object Relational {
             .as("sum_price_clean"))
           .crossJoin(dropped.agg(count(lit(1)).as("n_dropmalformed")))
           .localCheckpoint()
-      } finally s.conf.set(pruneKey, prev)
+      }
     }),
 
     // a19: PARQUET COLUMN BLOOM FILTERS — the third stats layer of the
@@ -2321,20 +2171,16 @@ object Relational {
     // 100-TB safety net for every filter the optimizer can't model:
     // the expensive plan is only a FALLBACK until real sizes arrive.
     "c22_join_aqe_broadcast_switch" -> ((s, d) => {
-      // two thresholds split the regimes AT TOY SCALE (restored in the
-      // finally; at 100 TB the default 10 MB produces the same split
-      // naturally): the STATIC threshold sits below the dim's
-      // file-size-based estimate (the estimator sees the unfiltered
-      // hundreds of KB — the md5 filter admits no stats reasoning), the
-      // ADAPTIVE threshold above the ~230-row ACTUAL post-shuffle size
-      val (statKey, adapKey) = ("spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      val prev = (s.conf.get(statKey), s.conf.getOption(adapKey))
-      // 4 KB: below the smallest tier's orders file size (sf0.001 is a
-      // few tens of KB), so the static estimate exceeds it at EVERY sf
-      s.conf.set(statKey, (4 * 1024).toString)
-      s.conf.set(adapKey, (1024 * 1024).toString)
-      try {
+      // two thresholds split the regimes AT TOY SCALE (at 100 TB the
+      // default 10 MB produces the same split naturally): the STATIC
+      // threshold sits below the dim's file-size-based estimate (the
+      // estimator sees the unfiltered hundreds of KB — the md5 filter
+      // admits no stats reasoning), the ADAPTIVE threshold above the
+      // ~230-row ACTUAL post-shuffle size. 4 KB: below the smallest
+      // tier's orders file size (sf0.001 is a few tens of KB), so the
+      // static estimate exceeds it at EVERY sf.
+      withConf(s)("spark.sql.autoBroadcastJoinThreshold" -> (4 * 1024).toString,
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> (1024 * 1024).toString) {
         val dim = t(s, d, "orders")
           .filter(substring(md5(col("o_orderkey").cast(StringType)
             .cast(BinaryType)), 1, 2) < "04") // ~1.5%, stats-invisible
@@ -2356,12 +2202,6 @@ object Relational {
         require(finalPlan.contains("BroadcastHashJoin"),
           "AQE did not convert the join to broadcast at runtime:\n" + finalPlan)
         out
-      } finally {
-        s.conf.set(statKey, prev._1)
-        prev._2 match {
-          case Some(v) => s.conf.set(adapKey, v)
-          case None => s.conf.unset(adapKey)
-        }
       }
     }),
 
@@ -2430,11 +2270,8 @@ object Relational {
             USING parquet LOCATION '$base/$sub'""")
           s.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR ALL COLUMNS"): Unit
         }
-      val (cboKey, reorderKey) = ("spark.sql.cbo.enabled",
-        "spark.sql.cbo.joinReorder.enabled")
-      val prev = (s.conf.get(cboKey), s.conf.get(reorderKey))
-      s.conf.set(cboKey, "true"); s.conf.set(reorderKey, "true")
-      try {
+      withConf(s)("spark.sql.cbo.enabled" -> "true",
+          "spark.sql.cbo.joinReorder.enabled" -> "true") {
         val q = s.sql(s"""
           SELECT o_orderpriority, count(*) AS item_cnt,
             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
@@ -2461,8 +2298,6 @@ object Relational {
         // materialize under the pinned confs (the l39 idiom): the gated
         // plan must be the executed plan
         q.localCheckpoint()
-      } finally {
-        s.conf.set(cboKey, prev._1); s.conf.set(reorderKey, prev._2)
       }
     })
   )

@@ -12,6 +12,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   Trigger, ValueState}
 import org.apache.spark.sql.types._
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** SURVEY.md §2.I — Structured Streaming over the `events` stream table.
   *
@@ -47,20 +48,17 @@ object Streaming {
     * session (Verify and Bench both invoke each op in one session). */
   private val runSeq = new AtomicLong(0)
 
-  /** Streaming STATE partition count — one knob for every streaming key
-    * (runToTable + the inline writeStream sites). The r10 rule stands:
-    * size state partitions to the DATA (8 ≈ 12.5 k events each at
-    * sf0.1), not the session's 32 cores. r13 A/B-ed the obvious "fewer
-    * partitions, less per-batch store machinery" trim and it LOSES:
-    * 4 partitions runs ~6% slower than 8 on the aggregation keys and
-    * 16 ties 8 — at this state size the per-query fixed cost is source
-    * listing + the no-data watermark batch + sink commit, NOT the
-    * per-partition store open/commit, and halving partitions just
-    * halves shuffle parallelism. Results are partition-count-invariant
-    * either way (oracles untouched); the knob stays for cluster-profile
-    * experiments. */
-  private[graft] val stateParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
+  /** Streaming STATE partition count for every streaming key, sized to
+    * the data (8 ≈ 12.5 k events each at sf0.1), not the host's cores.
+    * Measured: 4 partitions run ~6% slower than 8 on the aggregation
+    * keys and 16 ties 8 — the per-query fixed cost is source listing,
+    * the no-data watermark batch and the sink commit, not the
+    * per-partition store open/commit. Results are partition-count-
+    * invariant. */
+  private[graft] val stateParts = 8
+  private val stateConf = "spark.sql.shuffle.partitions" -> stateParts.toString
+  private val rocksConf = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** SCHEMA-ADAPTIVE streaming source (mirrors [[graft.Tables.events]]):
     * streaming sources require an explicit schema, so probe the actual
@@ -119,42 +117,31 @@ object Streaming {
     }
   }
 
-  /** Run a streaming DataFrame to completion through the memory sink and
-    * return the result table. The checkpoint (offset/commit logs + state
-    * store files) is pinned to the app-keyed tmpfs scratch tree: the
-    * default temp checkpoint lands under /tmp on this VM's throttled
-    * virtio disk, whose stalls dominate the stateful ops' timings (worst
-    * for the stream-stream join, which checkpoints both sides' rows).
+  private def streamName(): String = s"graft_stream_${runSeq.incrementAndGet()}"
+
+  /** Run a streaming DataFrame to completion through the memory sink
+    * `name` and return the result table. The checkpoint (offset/commit
+    * logs + state store files) is pinned to the app-keyed tmpfs scratch
+    * tree: the default temp checkpoint lands under /tmp on a throttled
+    * disk, whose stalls dominate the stateful ops' timings (worst for
+    * the stream-stream join, which checkpoints both sides' rows).
     *
-    * State partitioning is sized to the DATA (8 partitions ≈ 12.5 k
-    * events each at sf0.1) instead of inheriting the session's 32 — the
-    * i8 r10 lesson applied to every streaming key: per micro-batch every
-    * state partition opens/commits its store, so the fixed machinery
-    * cost is ∝ partitions. The conf is read at query START (fresh
-    * checkpoint each run), set here and restored in a finally; results
-    * are partition-count-invariant, so the oracles are untouched. On a
-    * real cluster this is the same "size state partitions to executors ×
-    * state size" rule, and the per-batch fixed cost amortizes to noise.
-    *
-    * SEQUENTIAL-EXECUTION ASSUMPTION (here and in the i10/i11/i12/i14
-    * inline copies): the capture-in-prev/restore-in-finally mutation of
-    * the session-global `spark.sql.shuffle.partitions` is only safe
-    * because the Verify/Bench/test harnesses run queries one at a time
-    * on the shared session. Two queries interleaving on one session
-    * could capture "8" as prev and strand the session at 8 partitions.
-    * If concurrent query execution is ever introduced, scope the
-    * override per-query instead (a cloned `spark.newSession` sharing
-    * the state, or the writeStream-level conf). */
-  private def runToTable(s: SparkSession, df: DataFrame, mode: String): DataFrame = {
-    val name = s"graft_stream_${runSeq.incrementAndGet()}"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", stateParts)
-    try {
+    * The query starts with [[stateParts]] state partitions, so the plan
+    * and its state stores are sized at START (fresh checkpoint each
+    * run). With `rocksDb` it runs on the RocksDB state store provider,
+    * asserted fail-loud from the query's own progress metrics. */
+  private def runToTable(s: SparkSession, df: DataFrame, mode: String,
+      rocksDb: Boolean = false, name: String = streamName()): DataFrame = {
+    withConf(s)(stateConf +: (if (rocksDb) Seq(rocksConf) else Nil): _*) {
       val q = df.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", scratch(s, name, "ckpt"))
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      require(!rocksDb || q.recentProgress.exists(_.stateOperators.exists(
+          _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))),
+        s"streaming run $name must execute on the RocksDB state store " +
+          "provider (no rocksdb* metrics in the query progress)")
+    }
     s.table(name)
   }
 
@@ -203,32 +190,9 @@ object Streaming {
           s.catalog.dropTempView(old.table)
           deleteRec(new java.io.File(scratch(s, old.table, "ckpt")))
         }
-        import scala.jdk.CollectionConverters._
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        val prevProv = s.conf.getOption(provKey)
-        val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set(provKey, rocks)
-        s.conf.set("spark.sql.shuffle.partitions", stateParts)
-        try {
-          val name = s"graft_stream_${runSeq.incrementAndGet()}"
-          val q = tumblingAgg(eventsStream(s, d))
-            .writeStream.format("memory").queryName(name)
-            .option("checkpointLocation", scratch(s, name, "ckpt"))
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          require(q.recentProgress.exists(_.stateOperators.exists(
-              _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))),
-            "shared tumbling-Append run must execute on the RocksDB state " +
-              "store provider (no rocksdb* metrics in the query progress)")
-          SharedRun(sig, name, s.table(name))
-        } finally {
-          s.conf.set("spark.sql.shuffle.partitions", prevPart)
-          prevProv match {
-            case Some(v) => s.conf.set(provKey, v)
-            case None => s.conf.unset(provKey)
-          }
-        }
+        val name = streamName()
+        SharedRun(sig, name, runToTable(s, tumblingAgg(eventsStream(s, d)),
+          "append", rocksDb = true, name = name))
       }
     }).df
   }
@@ -445,39 +409,29 @@ object Streaming {
     // the data — per micro-batch (data + watermark-advance), every state
     // partition opens/commits 4 join state stores; measured identical
     // with single- vs dual-source scans and with checkpoints on tmpfs.
-    // That fixed cost is ∝ shuffle partitions, so this query sizes its
-    // state partitioning to the data (8 partitions ≈ 12.5 k events each
-    // at sf0.1) instead of inheriting the session's 32 — the same
-    // "size shuffle partitions to the workload" rule every batch op
-    // follows, applied to state stores (restored in a finally; results
-    // are partition-count-invariant, so the oracle is untouched). On a
-    // real cluster the state partition count is sized to executors ×
-    // state size, and the per-batch fixed cost amortizes to noise.
+    // That fixed cost is ∝ state partitions, which runToTable sizes to
+    // the data ([[stateParts]]).
     "i8_stream_stream_join" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", stateParts)
-      try {
-        // ONE source, self-joined: both sides derive from the same
-        // watermarked scan, so each micro-batch reads the file once
-        val ev = eventsStream(s, d).withWatermark("ts", "1 hour")
-        val clicks = ev
-          .filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").as("click_ts"))
-        val purchases = ev
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-            col("ts").as("purchase_ts"))
-        val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
-        runToTable(s, joined, "append")
-          .select(col("click_id"), col("purchase_id"), col("user_id"),
-            epochUs(col("click_ts")).as("click_ts_us"),
-            epochUs(col("purchase_ts")).as("purchase_ts_us"))
-          .orderBy("click_id", "purchase_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      // ONE source, self-joined: both sides derive from the same
+      // watermarked scan, so each micro-batch reads the file once
+      val ev = eventsStream(s, d).withWatermark("ts", "1 hour")
+      val clicks = ev
+        .filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"),
+          col("ts").as("click_ts"))
+      val purchases = ev
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+          col("ts").as("purchase_ts"))
+      val joined = clicks.join(purchases,
+        col("user_id") === col("p_user") &&
+          col("purchase_ts") >= col("click_ts") &&
+          col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
+      runToTable(s, joined, "append")
+        .select(col("click_id"), col("purchase_id"), col("user_id"),
+          epochUs(col("click_ts")).as("click_ts_us"),
+          epochUs(col("purchase_ts")).as("purchase_ts_us"))
+        .orderBy("click_id", "purchase_id")
     }),
 
     // i15: stream-stream LEFT OUTER join — the OTHER half of the i8
@@ -500,29 +454,25 @@ object Streaming {
     // DuckDB NULLS LAST — the coalesce removes the engine disagreement
     // instead of papering over it per engine.
     "i15_stream_stream_left_join" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", stateParts)
-      try {
-        val ev = eventsStream(s, d).withWatermark("ts", "1 hour")
-        val clicks = ev
-          .filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").as("click_ts"))
-        val purchases = ev
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-            col("ts").as("purchase_ts"))
-        val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
-          "left_outer")
-        runToTable(s, joined, "append")
-          .select(col("click_id"), col("purchase_id"), col("user_id"),
-            epochUs(col("click_ts")).as("click_ts_us"),
-            epochUs(col("purchase_ts")).as("purchase_ts_us"))
-          .orderBy(col("click_id"), coalesce(col("purchase_id"), lit(-1L)))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val ev = eventsStream(s, d).withWatermark("ts", "1 hour")
+      val clicks = ev
+        .filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"),
+          col("ts").as("click_ts"))
+      val purchases = ev
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+          col("ts").as("purchase_ts"))
+      val joined = clicks.join(purchases,
+        col("user_id") === col("p_user") &&
+          col("purchase_ts") >= col("click_ts") &&
+          col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
+        "left_outer")
+      runToTable(s, joined, "append")
+        .select(col("click_id"), col("purchase_id"), col("user_id"),
+          epochUs(col("click_ts")).as("click_ts_us"),
+          epochUs(col("purchase_ts")).as("purchase_ts_us"))
+        .orderBy(col("click_id"), coalesce(col("purchase_id"), lit(-1L)))
     }),
 
     // i16: dedup WITHIN the watermark — `dropDuplicatesWithinWatermark`,
@@ -619,34 +569,9 @@ object Streaming {
     // fail-loud from the query's own progress metrics, and pinned again in
     // StreamingSpec.
     "i11_stream_session_append" -> ((s, d) => {
-      import scala.jdk.CollectionConverters._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      val prev = s.conf.getOption(key)
-      val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(key, rocks)
-      s.conf.set("spark.sql.shuffle.partitions", stateParts) // the runToTable sizing
-      try {
-        val name = s"graft_stream_${runSeq.incrementAndGet()}"
-        val q = sessionAgg(eventsStream(s, d))
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", scratch(s, name, "ckpt"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        require(q.recentProgress.exists(_.stateOperators.exists(
-            _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))),
-          "i11 must run on the RocksDB state store provider " +
-            "(no rocksdb* metrics in the query progress)")
-        s.table(name)
-          .select("user_id", "n_events", "sess_start_us", "sess_end_us")
-          .orderBy("user_id", "sess_start_us")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevPart)
-        prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
-      }
+      runToTable(s, sessionAgg(eventsStream(s, d)), "append", rocksDb = true)
+        .select("user_id", "n_events", "sess_start_us", "sess_end_us")
+        .orderBy("user_id", "sess_start_us")
     }),
 
     // i7: watermark / late-data semantics — the events table split into
@@ -861,45 +786,21 @@ object Streaming {
     // in RocksDB, so executor heap stays flat at any key cardinality.
     "i17_stream_transform_state" -> ((s, d) => {
       import s.implicits._
-      import scala.jdk.CollectionConverters._
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      val prevProv = s.conf.getOption(provKey)
-      val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(provKey, rocks)
-      s.conf.set("spark.sql.shuffle.partitions", stateParts)
-      try {
-        val name = s"graft_stream_${runSeq.incrementAndGet()}"
-        val rows = eventsStream(s, d)
-          .select(col("user_id"),
-            floor(col("value") * 1e6 + 0.5).cast(LongType).as("uval"),
-            epochUs(col("ts")).as("ts_us"))
-          .as[(Long, Long, Long)]
-        val updated = rows.groupByKey(_._1)
-          .transformWithState(new RunningStatsProcessor,
-            TimeMode.None(), OutputMode.Update())
-        val q = updated.toDF("user_id", "cnt", "sum_uval", "max_ts_us")
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", scratch(s, name, "ckpt"))
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        require(q.recentProgress.exists(_.stateOperators.exists(
-            _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))),
-          "i17 must run on the RocksDB state store provider " +
-            "(no rocksdb* metrics in the query progress)")
-        s.table(name)
-          .groupBy("user_id")
-          .agg(max(struct(col("cnt"), col("sum_uval"), col("max_ts_us"))).as("x"))
-          .select(col("user_id"), col("x.cnt").as("cnt"),
-            col("x.sum_uval").as("sum_uval"), col("x.max_ts_us").as("max_ts_us"))
-          .orderBy("user_id")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevPart)
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
+      val rows = eventsStream(s, d)
+        .select(col("user_id"),
+          floor(col("value") * 1e6 + 0.5).cast(LongType).as("uval"),
+          epochUs(col("ts")).as("ts_us"))
+        .as[(Long, Long, Long)]
+      val updated = rows.groupByKey(_._1)
+        .transformWithState(new RunningStatsProcessor,
+          TimeMode.None(), OutputMode.Update())
+      runToTable(s, updated.toDF("user_id", "cnt", "sum_uval", "max_ts_us"),
+          "update", rocksDb = true)
+        .groupBy("user_id")
+        .agg(max(struct(col("cnt"), col("sum_uval"), col("max_ts_us"))).as("x"))
+        .select(col("user_id"), col("x.cnt").as("cnt"),
+          col("x.sum_uval").as("sum_uval"), col("x.max_ts_us").as("max_ts_us"))
+        .orderBy("user_id")
     }),
 
     // i18: EVENT-TIME TIMERS on transformWithState — the second half of
@@ -919,41 +820,17 @@ object Streaming {
     // session_window's eviction provides, here enforced by hand.
     "i18_stream_session_timers" -> ((s, d) => {
       import s.implicits._
-      import scala.jdk.CollectionConverters._
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      val prevProv = s.conf.getOption(provKey)
-      val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(provKey, rocks)
-      s.conf.set("spark.sql.shuffle.partitions", stateParts)
-      try {
-        val name = s"graft_stream_${runSeq.incrementAndGet()}"
-        val rows = eventsStream(s, d)
-          .withWatermark("ts", "30 minutes")
-          .select(col("user_id"), epochUs(col("ts")).as("ts_us"))
-          .as[(Long, Long)]
-        val sessions = rows.groupByKey(_._1)
-          .transformWithState(new SessionTimerProcessor,
-            TimeMode.EventTime(), OutputMode.Append())
-        val q = sessions.toDF("user_id", "n_events", "sess_start_us", "sess_end_us")
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", scratch(s, name, "ckpt"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        require(q.recentProgress.exists(_.stateOperators.exists(
-            _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))),
-          "i18 must run on the RocksDB state store provider " +
-            "(no rocksdb* metrics in the query progress)")
-        s.table(name)
-          .select("user_id", "n_events", "sess_start_us", "sess_end_us")
-          .orderBy("user_id", "sess_start_us")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevPart)
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
+      val rows = eventsStream(s, d)
+        .withWatermark("ts", "30 minutes")
+        .select(col("user_id"), epochUs(col("ts")).as("ts_us"))
+        .as[(Long, Long)]
+      val sessions = rows.groupByKey(_._1)
+        .transformWithState(new SessionTimerProcessor,
+          TimeMode.EventTime(), OutputMode.Append())
+      runToTable(s, sessions.toDF("user_id", "n_events", "sess_start_us",
+          "sess_end_us"), "append", rocksDb = true)
+        .select("user_id", "n_events", "sess_start_us", "sess_end_us")
+        .orderBy("user_id", "sess_start_us")
     }),
 
     // i29: INITIAL STATE on transformWithState — the third corner of the
@@ -979,57 +856,33 @@ object Streaming {
     // and stream shuffle identically to i17.
     "i29_stream_initial_state" -> ((s, d) => {
       import s.implicits._
-      import scala.jdk.CollectionConverters._
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      val prevProv = s.conf.getOption(provKey)
-      val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(provKey, rocks)
-      s.conf.set("spark.sql.shuffle.partitions", stateParts)
-      try {
-        val name = s"graft_stream_${runSeq.incrementAndGet()}"
-        val snapshot = t(s, d, "events")
-          .filter(col("event_id") % 2 === 0)
-          .select(col("user_id"),
-            floor(col("value") * 1e6 + 0.5).cast(LongType).as("uval"),
-            epochUs(col("ts")).as("ts_us"))
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("cnt"), sum(col("uval")).as("sum_uval"),
-            max(col("ts_us")).as("max_ts_us"))
-          .as[(Long, Long, Long, Long)]
-          .groupByKey(_._1)
-          .mapValues { case (_, c, sm, mx) => (c, sm, mx) }
-        val rows = eventsStream(s, d)
-          .filter(col("event_id") % 2 === 1)
-          .select(col("user_id"),
-            floor(col("value") * 1e6 + 0.5).cast(LongType).as("uval"),
-            epochUs(col("ts")).as("ts_us"))
-          .as[(Long, Long, Long)]
-        val updated = rows.groupByKey(_._1)
-          .transformWithState(new InitRunningStatsProcessor,
-            TimeMode.None(), OutputMode.Update(), snapshot)
-        val q = updated.toDF("user_id", "cnt", "sum_uval", "max_ts_us")
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", scratch(s, name, "ckpt"))
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        require(q.recentProgress.exists(_.stateOperators.exists(
-            _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))),
-          "i29 must run on the RocksDB state store provider " +
-            "(no rocksdb* metrics in the query progress)")
-        s.table(name)
-          .groupBy("user_id")
-          .agg(max(struct(col("cnt"), col("sum_uval"), col("max_ts_us"))).as("x"))
-          .select(col("user_id"), col("x.cnt").as("cnt"),
-            col("x.sum_uval").as("sum_uval"), col("x.max_ts_us").as("max_ts_us"))
-          .orderBy("user_id")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevPart)
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
+      val snapshot = t(s, d, "events")
+        .filter(col("event_id") % 2 === 0)
+        .select(col("user_id"),
+          floor(col("value") * 1e6 + 0.5).cast(LongType).as("uval"),
+          epochUs(col("ts")).as("ts_us"))
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("cnt"), sum(col("uval")).as("sum_uval"),
+          max(col("ts_us")).as("max_ts_us"))
+        .as[(Long, Long, Long, Long)]
+        .groupByKey(_._1)
+        .mapValues { case (_, c, sm, mx) => (c, sm, mx) }
+      val rows = eventsStream(s, d)
+        .filter(col("event_id") % 2 === 1)
+        .select(col("user_id"),
+          floor(col("value") * 1e6 + 0.5).cast(LongType).as("uval"),
+          epochUs(col("ts")).as("ts_us"))
+        .as[(Long, Long, Long)]
+      val updated = rows.groupByKey(_._1)
+        .transformWithState(new InitRunningStatsProcessor,
+          TimeMode.None(), OutputMode.Update(), snapshot)
+      runToTable(s, updated.toDF("user_id", "cnt", "sum_uval", "max_ts_us"),
+          "update", rocksDb = true)
+        .groupBy("user_id")
+        .agg(max(struct(col("cnt"), col("sum_uval"), col("max_ts_us"))).as("x"))
+        .select(col("user_id"), col("x.cnt").as("cnt"),
+          col("x.sum_uval").as("sum_uval"), col("x.max_ts_us").as("max_ts_us"))
+        .orderBy("user_id")
     }),
 
     // i19: STREAMING UPSERT via foreachBatch — the "stream MERGEs into a
@@ -1049,10 +902,8 @@ object Streaming {
     // at 100 TB the store is bucketed by key and the join is co-located.
     "i19_stream_foreachbatch_upsert" -> ((s, d) => {
       val store = scratch(s, s"i19_${runSeq.incrementAndGet()}", "store")
-      val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", stateParts)
-      try {
-        val q = eventsStream(s, d)
+      withConf(s)(stateConf) {
+        eventsStream(s, d)
           .select(col("user_id"), col("event_id"),
             epochUs(col("ts")).as("ts_us"), col("value"))
           .writeStream
@@ -1061,8 +912,8 @@ object Streaming {
           }
           .option("checkpointLocation", scratch(s, store, "ckpt"))
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevPart)
+          .awaitTermination()
+      }
       val fin = latestVersion(store).getOrElse(
         sys.error("i19: no store version published"))
       s.read.parquet(s"$store/v$fin")
@@ -1167,10 +1018,8 @@ object Streaming {
       val tag = runSeq.incrementAndGet()
       val log = scratch(s, s"i24_$tag", "log")
       val agg = scratch(s, s"i24_$tag", "agg")
-      val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", stateParts)
-      try {
-        val q = eventsStream(s, d)
+      withConf(s)(stateConf) {
+        eventsStream(s, d)
           .select(col("event_id"), col("event_type"), col("user_id"))
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -1178,8 +1027,8 @@ object Streaming {
           }
           .option("checkpointLocation", scratch(s, s"i24_$tag", "ckpt"))
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevPart)
+          .awaitTermination()
+      }
       val fin = latestVersion(agg).getOrElse(
         sys.error("i24: no aggregate version published"))
       s.read.parquet(s"$log/v*")
@@ -1209,20 +1058,7 @@ object Streaming {
     // state — which makes the whole pipeline batch-oracle-derivable.
     "i27_stream_mor_upsert" -> ((s, d) => {
       val root = cachedFixture(s, d, "i27_mor") { p =>
-        val dir = new java.io.File(p, "orders_cdc"); dir.mkdirs()
-        val rows = graft.Tables.t(s, d, "orders")
-          .filter(col("o_orderkey") < 1200)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_cdc", Some(1200))
         // the changelog: one parquet FILE per slice so maxFilesPerTrigger=1
         // yields one micro-batch per slice
         val ord = graft.Tables.t(s, d, "orders")
@@ -1251,10 +1087,7 @@ object Streaming {
           graft.Tables.deleteRec(new java.io.File(tmp))
         }
       }
-      val cat = s"graft_cdc_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.MorDeltaCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_cdc", classOf[graft.sources.MorDeltaCatalog], root)
       val dir = new java.io.File(root, "orders_cdc")
       // idempotence guard = the delta log (cached-fixture re-runs skip)
       if (graft.sources.MorDeltas.deltaFiles(dir).isEmpty) {
@@ -1262,10 +1095,8 @@ object Streaming {
           .map { case (f, _, _) => (f.getName, f.length, f.lastModified) }
         val tag = runSeq.incrementAndGet()
         val schema = s.read.parquet(s"$root/changelog").schema
-        val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", stateParts)
-        try {
-          val q = s.readStream.schema(schema)
+        withConf(s)(stateConf) {
+          s.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(s"$root/changelog")
             .writeStream
@@ -1282,8 +1113,8 @@ object Streaming {
             }
             .option("checkpointLocation", scratch(s, s"i27_$tag", "ckpt"))
             .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevPart)
+            .awaitTermination()
+        }
         require(graft.sources.MorDeltas.deltaFiles(dir).size == 3,
           "i27: one delta file per micro-batch (3 key-disjoint slices)")
         require(graft.sources.CowTable.manifest(dir)
@@ -1316,25 +1147,9 @@ object Streaming {
     // wrote — no table scan, no manifest diff, no file re-read.
     "i28_stream_mor_cdf" -> ((s, d) => {
       val root = cachedFixture(s, d, "i28_mcdf") { p =>
-        val dir = new java.io.File(p, "orders_mc"); dir.mkdirs()
-        val rows = graft.Tables.t(s, d, "orders")
-          .filter(col("o_orderkey") < 1200)
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .orderBy("o_orderkey").collect() // fixture-build only (a16 idiom)
-        val per = math.max(1, math.ceil(rows.length / 4.0).toInt)
-        rows.grouped(per).zipWithIndex.foreach { case (chunk, i) =>
-          val lines = chunk.map(r =>
-            s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}")
-          java.nio.file.Files.write(
-            new java.io.File(dir,
-              s"part-$i-${chunk.head.getLong(0)}-${chunk.last.getLong(0)}.csv").toPath,
-            java.util.Arrays.asList(lines: _*))
-        }
+        seedOrdersCsv(s, d, s"$p/orders_mc", Some(1200))
       }
-      val cat = s"graft_mc_${Integer.toHexString(root.hashCode)}"
-      s.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.MorDeltaCatalog].getName)
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
+      val cat = catalog(s, "graft_mc", classOf[graft.sources.MorDeltaCatalog], root)
       val dir = new java.io.File(root, "orders_mc")
       if (graft.sources.MorDeltas.deltaFiles(dir).isEmpty) {
         s.sql(s"DELETE FROM $cat.orders_mc WHERE k % 10 = 7") // -> v1
@@ -1441,7 +1256,7 @@ object Streaming {
         for (_ <- 1 to 3) {
           val q = s.readStream.format("rate-micro-batch")
             .option("rowsPerBatch", 1000)
-            .option("numPartitions", stateParts.toInt)
+            .option("numPartitions", stateParts)
             .option("startTimestamp", 0L)
             .option("advanceMillisPerBatch", 60000)
             .load()

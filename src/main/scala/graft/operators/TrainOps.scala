@@ -2491,8 +2491,8 @@ object TrainOps {
     // THE SCAN, before the shuffle, which at 100 TB is the difference
     // between shuffling the whole fact table and shuffling the ~1/35
     // that survives. Thresholds are sized for real lakes (app side >
-    // 10 GB), so the demo pins them to the corpus and restores them in a
-    // finally. Injection targets genuine SHUFFLE joins — a dim under the
+    // 10 GB), so the demo pins them to the corpus for this key.
+    // Injection targets genuine SHUFFLE joins — a dim under the
     // broadcast threshold plans as a broadcast join and Spark (rightly)
     // skips the bloom, so the demo also disables auto-broadcast to
     // recreate the both-sides-large regime the lever exists for (at
@@ -2502,13 +2502,9 @@ object TrainOps {
     // cost work, never rows — result join-invariant, so the oracle is
     // the plain join SQL.
     "l39_join_runtime_bloom" -> ((s, d) => {
-      val appKey = "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-      val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-      val prevApp = s.conf.get(appKey)
-      val prevBc = s.conf.get(bcKey)
-      s.conf.set(appKey, "0")
-      s.conf.set(bcKey, "-1")
-      try {
+      withConf(s)(
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val dim = t(s, d, "orders")
           .filter(col("o_orderpriority") === "1-URGENT" &&
             year(col("o_orderdate")) === 2001)
@@ -2524,12 +2520,9 @@ object TrainOps {
           "runtime bloom filter was not injected on the fact scan:\n" + p)
         // materialize UNDER the pinned confs (eager localCheckpoint, the
         // l35 idiom): the caller's later write/count must not re-plan the
-        // join after the finally restores broadcast — the gated plan is
+        // join after the scope restores broadcast — the gated plan is
         // the executed plan
         j.localCheckpoint()
-      } finally {
-        s.conf.set(appKey, prevApp)
-        s.conf.set(bcKey, prevBc)
       }
     }),
 

@@ -115,8 +115,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // InternalRow boxing) and it stays inside whole-stage codegen —
     // pin it from the executed plan so a silent fallback to the
     // interpreted ApplyFunctionExpression path is caught
-    spark.conf.set("spark.sql.catalog.graft_fn",
-      classOf[graft.functions.GraftFunctionCatalog].getName)
+    Tables.catalog(spark, "graft_fn", classOf[graft.functions.GraftFunctionCatalog])
     import spark.implicits._
     val df = Seq((54L, 24L), (7L, 0L), (0L, 0L), (-8L, 12L)).toDF("a", "b")
     df.createOrReplaceTempView("k10_probe")

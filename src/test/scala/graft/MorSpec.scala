@@ -22,10 +22,7 @@ class MorSpec extends AnyFunSuite {
       java.util.Arrays.asList("10,b,1.0", "11,b,2.0", "12,b,3.0"))
     java.nio.file.Files.write(new File(tbl, "part-2-20-22.csv").toPath,
       java.util.Arrays.asList("20,c,1.0", "21,c,2.0", "22,c,3.0"))
-    val cat = s"mor_${tag}_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.MorDeltaCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, s"mor_$tag", classOf[graft.sources.MorDeltaCatalog], root)
     (cat, tbl)
   }
 

@@ -206,10 +206,7 @@ class SinkSpec extends AnyFunSuite {
       java.nio.file.Files.write(new File(tbl, s"part-$i-$lo-$hi.csv").toPath,
         java.util.Arrays.asList((lo to hi).map(k => s"$k,$st,1.5"): _*))
     write(0, 1, 3, "x"); write(1, 10, 12, "x"); write(2, 20, 22, "y")
-    val cat = s"cow_spec_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.CowDeleteCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, "cow_spec", classOf[graft.sources.CowDeleteCatalog], root)
     val untouched = new File(tbl, "part-2-20-22.csv")
     val mt0 = untouched.lastModified
     spark.sql(s"DELETE FROM $cat.t WHERE k < 11")
@@ -248,10 +245,7 @@ class SinkSpec extends AnyFunSuite {
       java.util.Arrays.asList("1,a,1.5", "2,a,2.5"))
     java.nio.file.Files.write(new File(tbl, "part-1-10-11.csv").toPath,
       java.util.Arrays.asList("10,b,1.0", "11,b,2.0"))
-    val cat = s"cow_tt_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.CowDeleteCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, "cow_tt", classOf[graft.sources.CowDeleteCatalog], root)
     graft.sources.CowVersions.enable(tbl) // v0
     spark.sql(s"DELETE FROM $cat.t WHERE k >= 10") // v1: part-1 retired
     // recreate the EXACT file name the delete just retired: idxBase
@@ -305,10 +299,7 @@ class SinkSpec extends AnyFunSuite {
       java.util.Arrays.asList("10,b,1.0", "11,b,2.0", "12,b,3.0"))
     java.nio.file.Files.write(new File(tbl, "part-2-20-22.csv").toPath,
       java.util.Arrays.asList("20,c,1.0", "21,c,2.0", "22,c,3.0"))
-    val cat = s"cow_rlp_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.CowDeleteCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, "cow_rlp", classOf[graft.sources.CowDeleteCatalog], root)
     val f1 = new File(tbl, "part-1-10-12.csv")
     val f2 = new File(tbl, "part-2-20-22.csv")
     val (s1, m1) = (f1.length, f1.lastModified)
@@ -333,10 +324,7 @@ class SinkSpec extends AnyFunSuite {
     // first-class citizen of the rest of the connector — row-level
     // UPDATE, executable DELETE, and NULL-encoded string/long columns
     val root = freshDir("cow_ctas")
-    val cat = s"cow_ctas_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.CowDeleteCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, "cow_ctas", classOf[graft.sources.CowDeleteCatalog], root)
     spark.sql(s"""CREATE TABLE $cat.t AS
       SELECT * FROM VALUES (1L, 'x', CAST(NULL AS BIGINT)),
                            (2L, NULL, 7L),
@@ -365,10 +353,7 @@ class SinkSpec extends AnyFunSuite {
       java.util.Arrays.asList("5,a,1.0", "9,a,2.0"))
     java.nio.file.Files.write(new File(tbl, "part-1-20-30.csv").toPath,
       java.util.Arrays.asList("20,b,1.0", "30,b,2.0"))
-    val cat = s"cow_aggpin_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.CowDeleteCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, "cow_aggpin", classOf[graft.sources.CowDeleteCatalog], root)
     graft.sources.CowVersions.enable(tbl) // v0
     spark.sql(s"DELETE FROM $cat.t WHERE k >= 20") // v1: file retired to archive
     def gate(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Row = {
@@ -406,10 +391,7 @@ class SinkSpec extends AnyFunSuite {
       java.util.Arrays.asList("1,a,1.5", "2,b,2.5", "3,c,3.5"))
     java.nio.file.Files.write(new File(tbl, "part-1-10-12.csv").toPath,
       java.util.Arrays.asList("10,d,1.0", "11,e,2.0", "12,f,3.0"))
-    val cat = s"cow_fuzz_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.CowDeleteCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, "cow_fuzz", classOf[graft.sources.CowDeleteCatalog], root)
     graft.sources.CowVersions.enable(tbl)
 
     type R = (Long, String, Double)
@@ -498,10 +480,7 @@ class SinkSpec extends AnyFunSuite {
     val tbl = new File(root, "t"); tbl.mkdirs()
     java.nio.file.Files.write(new File(tbl, "part-0-1-2.csv").toPath,
       java.util.Arrays.asList("1,a,1.5", "2,b,2.5"))
-    val cat = s"cow_evo_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.CowDeleteCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, "cow_evo", classOf[graft.sources.CowDeleteCatalog], root)
     val seeded = new File(tbl, "part-0-1-2.csv")
     val (len0, mt0) = (seeded.length, seeded.lastModified)
 

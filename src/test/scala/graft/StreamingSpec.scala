@@ -640,10 +640,7 @@ class StreamingSpec extends AnyFunSuite {
     val tbl = new java.io.File(root, "t"); tbl.mkdirs()
     java.nio.file.Files.write(new java.io.File(tbl, "part-0-1-2.csv").toPath,
       java.util.Arrays.asList("1,a,1.5", "2,b,2.5"))
-    val cat = s"cdf_spec_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.CowDeleteCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, "cdf_spec", classOf[graft.sources.CowDeleteCatalog], root)
     graft.sources.CowVersions.enable(tbl) // v0
     spark.sql(s"DELETE FROM $cat.t WHERE k = 1") // v1
     spark.sql(s"INSERT INTO $cat.t VALUES (5, 'x', 1.0)") // v2
@@ -676,10 +673,7 @@ class StreamingSpec extends AnyFunSuite {
     val tbl = new java.io.File(root, "t"); tbl.mkdirs()
     java.nio.file.Files.write(new java.io.File(tbl, "part-0-1-2.csv").toPath,
       java.util.Arrays.asList("1,a,1.5", "2,b,2.5"))
-    val cat = s"mcdf_spec_${root.hashCode.toHexString}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.MorDeltaCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val cat = Tables.catalog(spark, "mcdf_spec", classOf[graft.sources.MorDeltaCatalog], root)
     spark.sql(s"DELETE FROM $cat.t WHERE k = 1")                 // v1
     spark.sql(s"UPDATE $cat.t SET total = 9.0 WHERE k = 2")     // v2
     val ckpt = TestSpark.tmpDir("graft_mcdf_ck")
