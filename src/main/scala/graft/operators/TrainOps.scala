@@ -53,111 +53,83 @@ object TrainOps {
   private def idBelow(id: Column, thresholdHex: String): Column =
     substring(md5(id.cast(StringType).cast(BinaryType)), 1, 2) < thresholdHex
 
-  /** BPE merge-rule induction over a token stream (column `term`): the
-    * corpus collapses to the word-frequency table, each type becomes a
-    * char symbol array + end-of-word marker, and each round argmaxes the
-    * weighted adjacent-pair count (freq DESC, pair lex — the tie-break
-    * TrainOpsSpec pins) then rewrites every [l, r] → [lr] with a
-    * one-symbol-lookahead fold (`aggregate` HOF, (out, pending)
-    * accumulator — greedy left-to-right, the standard application
-    * order). The per-round head() is a 1-row aggregate by design:
-    * distributed BPE trainers reduce pair counts on the cluster and
-    * pick the single winning merge centrally, exactly this shape. */
-  /** One exhaustive left-to-right application of the merge rule
-    * [l, r] → lr over a symbol array — the (out, pending) one-symbol-
-    * lookahead fold shared by training (bpeMerges, one rule per round)
-    * and encoding (l48, the learned rules in rank order). A single pass
-    * IS exhaustive for one rule: greedy-leftmost consumption means no
-    * (l, r) adjacency can survive it (the merged symbol lr differs from
-    * both l and r — lengths add — so it can never re-form the pair with
-    * a neighbor the pass hasn't already considered). */
-  private[graft] def applyMerge(syms: Column, lS: String, rS: String): Column = {
-    val init = struct(expr("array()").cast("array<string>").as("out"),
-      lit(null).cast(StringType).as("p"))
-    aggregate(syms, init,
-      (acc, c) => {
-        val out = acc.getField("out")
-        val p = acc.getField("p")
-        when(p.isNull, struct(out.as("out"), c.as("p")))
-          .when(p === lit(lS) && c === lit(rS),
-            struct(concat(out, array(lit(lS + rS))).as("out"),
-              lit(null).cast(StringType).as("p")))
-          .otherwise(struct(concat(out, array(p)).as("out"), c.as("p")))
-      },
-      acc => when(acc.getField("p").isNull, acc.getField("out"))
-        .otherwise(concat(acc.getField("out"), array(acc.getField("p")))))
-  }
-
-  /** The distinct-term vocabulary encoded under `merges` (rank order):
-    * (term, syms) — the l48 kernel, factored for the spec's sequential-
-    * reference comparison. */
-  private[graft] def bpeEncodeVocab(toks: DataFrame,
-      merges: Seq[(String, String)]): DataFrame = {
-    var vocab = toks.select("term").distinct()
-      .withColumn("syms", concat(split(col("term"), ""), array(lit("#"))))
-    for ((l, r) <- merges)
-      vocab = vocab.withColumn("syms", applyMerge(col("syms"), l, r))
-    vocab
-  }
-
-  /** BPE merge-table trainer: `nRounds` argmax rounds, each ONE 1-row
-    * driver collect (the winning pair) over a candidate-pair aggregation.
+  /** BPE merge-rule induction (Sennrich et al., ACL 2016) over a token
+    * stream (column `term`): the first `nRounds` merges as `(rank int,
+    * left string, right string, freq long)`, ordered by rank.
     *
-    * SCALE BOUND (the production rule, probed 8×/32× in SURVEY §7.5): the
-    * trainer's per-round input is the distinct-WORD table `(syms, cnt)` —
-    * the corpus collapses to a word histogram in the first groupBy and
-    * never re-enters the loop, so round cost is vocabulary-sized, not
-    * corpus-sized (clone probes read sublinear: 2.0 → 3.1 s at 8×/32×).
-    * At 100 TB you additionally CAP the histogram (train on a bounded
-    * top-frequency word shard — merge quality is frequency-dominated, the
-    * tail adds nothing) and stream the full corpus only through ENCODING
-    * (l48), which folds per distinct term against the trained table. The
-    * 1-row-per-round collects are coordinator-sized by design. */
+    * The corpus reduces on the cluster to its word histogram
+    * ([[bpeHistogram]], one aggregation, collected once); the rounds then
+    * run in memory ([[bpeTrain]]) and launch no Spark job. The histogram
+    * has one row per distinct word — vocabulary-sized, sub-linear in the
+    * corpus by Heaps' law — which is the table every BPE trainer holds in
+    * memory, so no corpus-sized data leaves the cluster. */
   private[graft] def bpeMerges(s: SparkSession, toks: DataFrame,
       nRounds: Int): DataFrame = {
-    val eow = "#"
-    // LAZY checkpoints throughout the trainer (r22, VERDICT r21 task 5):
-    // each round's 1-row argmax collect is the materializing action for
-    // the PREVIOUS round's merge application — the per-round plan is
-    // "scan cached words ▸ apply last rule ▸ persist ▸ pair-count ▸
-    // argmax", ONE Spark job per round where the r21 eager form paid two
-    // (apply+checkpoint, then count), and the final round's application
-    // (which nothing reads) is never computed. Lineage stays one round
-    // deep: round r's blocks are persisted inside round r+1's job before
-    // anything builds on them.
-    var words = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
-      .withColumn("syms", concat(split(col("term"), ""), array(lit(eow))))
-      .select("cnt", "syms")
-      .localCheckpoint(eager = false)
-    val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-    var exhausted = false
-    for (r <- 1 to nRounds if !exhausted) {
-      // fully-merged words (ONE symbol left) contribute no pairs — and
-      // must be filtered BEFORE the index walk: sequence(0, size-2)
-      // DESCENDS for size = 1 ([0, -1]) and the element_at probe throws
-      // (found by the 8x scale probe, where the clone-marker tokens
-      // merge to single symbols within 5 rounds)
-      val tops = words.filter(size(col("syms")) >= 2)
-        .select(col("cnt"),
-          explode(transform(sequence(lit(0), size(col("syms")) - 2),
-            i => struct(element_at(col("syms"), i + 1).as("l"),
-              element_at(col("syms"), i + 2).as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("freq"))
-        .orderBy(col("freq").desc, col("l"), col("r"))
-        .limit(1).collect() // the winning merge — a 1-row aggregate
-      if (tops.isEmpty) { exhausted = true } // every word fully merged
-      else {
-        val top = tops.head
-        val (lS, rS, f) = (top.getString(0), top.getString(1), top.getLong(2))
-      merges += ((r, lS, rS, f))
-      words = words.withColumn("syms", applyMerge(col("syms"), lS, rS))
-          .localCheckpoint(eager = false)
-      }
-    }
     import s.implicits._
-    merges.toSeq.toDF("rank", "left", "right", "freq").orderBy("rank")
+    bpeTrain(bpeHistogram(toks), nRounds)
+      .toDF("rank", "left", "right", "freq").orderBy("rank")
   }
+
+  /** `(term, count)` over a token stream, collected. */
+  private def bpeHistogram(toks: DataFrame): Seq[(String, Long)] =
+    toks.groupBy("term").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+
+  /** The merge loop over a word histogram. Each word starts as its chars
+    * plus the end-of-word marker `#`. Each round sums adjacent-pair counts
+    * weighted by word count — with `Math.addExact`, so an overflowing
+    * count throws as ANSI `sum` does — picks the winner by (freq DESC,
+    * left, right) and applies it to every word with [[bpeMergeOnce]].
+    * `String` order is UTF-16 code-unit order, which on the `[a-z#]`
+    * alphabet of [[LlmOps.tokens]] equals the binary UTF-8 order a Spark
+    * `orderBy` uses, so ties break as they would in SQL. The loop stops
+    * early once every word is one symbol (no pair left), returning fewer
+    * than `nRounds` merges. */
+  private def bpeTrain(hist: Seq[(String, Long)],
+      nRounds: Int): Seq[(Int, String, String, Long)] = {
+    @annotation.tailrec
+    def round(r: Int, words: Seq[(Vector[String], Long)],
+        done: Vector[(Int, String, String, Long)]): Seq[(Int, String, String, Long)] =
+      if (r > nRounds) done
+      else {
+        val pairs = words.flatMap { case (syms, n) => syms.zip(syms.tail).map(_ -> n) }
+          .groupMapReduce(_._1)(_._2)(Math.addExact(_, _))
+        if (pairs.isEmpty) done
+        else {
+          val ((l, rt), f) = pairs.minBy { case ((a, b), f) => (-f, a, b) }
+          round(r + 1, words.map { case (syms, n) => (bpeMergeOnce(syms, l, rt), n) },
+            done :+ ((r, l, rt, f)))
+        }
+      }
+    round(1, hist.map { case (t, n) => (bpeSymbols(t), n) }, Vector.empty)
+  }
+
+  /** Each term's symbols after `merges` are applied in rank order — the
+    * l48 encoder. On the trainer's own histogram this is the trainer's
+    * final state: round r applies merge r to every word. */
+  private[graft] def bpeEncode(terms: Seq[String],
+      merges: Seq[(String, String)]): Map[String, Vector[String]] =
+    terms.map(t => t -> merges.foldLeft(bpeSymbols(t)) {
+      case (syms, (l, r)) => bpeMergeOnce(syms, l, r)
+    }).toMap
+
+  private def bpeSymbols(term: String): Vector[String] =
+    term.map(_.toString).toVector :+ "#"
+
+  /** One greedy left-to-right application of the merge [l, r] → lr, the
+    * fold shared by the trainer and the encoder. One pass is exhaustive:
+    * the merged symbol is longer than both l and r, so it never re-forms
+    * the pair with a neighbour the pass has already passed. */
+  private def bpeMergeOnce(syms: Vector[String], l: String, r: String): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) { out += l + r; i += 2 }
+      else { out += syms(i); i += 1 }
+    }
+    out.result()
+  }
+
   private def idBelow(thresholdHex: String): Column =
     idBelow(col("doc_id"), thresholdHex)
 
@@ -2619,48 +2591,41 @@ object TrainOps {
     // l43: BPE VOCABULARY INDUCTION — tokenizer TRAINING, the step the
     // l8/l13 token-consuming ops presuppose: learn the first 5 merge
     // rules of a byte-pair encoding from the corpus. Classic Sennrich
-    // BPE trains on the WORD-FREQUENCY table, not the raw stream — the
-    // corpus collapses to (word type, count) (31 types here; millions at
-    // web scale, still dwarfed by the corpus itself), each word a char
-    // symbol array with an end-of-word marker. Per round: (1) explode
-    // adjacent symbol pairs weighted by word count and argmax by
-    // (freq DESC, pair lex) — a 1-ROW aggregate head(), which is how
-    // real distributed BPE trainers work too (pair counts reduce on the
-    // cluster, the single winning merge is chosen centrally); (2) apply
-    // the merge to every word's symbol array with a fold (`aggregate`
-    // HOF with a (out, pending) accumulator — the one-symbol-lookahead
-    // fold that rewrites [l, r] → [lr] everywhere in one pass);
-    // localCheckpoint per round (the l42 iterative-lineage rule).
-    // Unoracled BY DESIGN: the 5-round merge application is a stateful
-    // fold SQL can't express non-recursively — TrainOpsSpec pins the
-    // textbook fixture (low/lower/newest/widest) whose first five
-    // merges are hand-derivable, tie-breaks included.
+    // BPE trains on the WORD-FREQUENCY table, not the raw stream: the
+    // corpus reduces on the cluster to (word, count) in one aggregation
+    // (31 words here; millions at web scale, still vocabulary-sized),
+    // collected once, and the rounds run over it in memory
+    // ([[bpeMerges]]). Invariants: winner by (freq DESC, left, right);
+    // each merge applies greedily leftmost to every word; the loop stops
+    // early when every word is one symbol; an overflowing pair count
+    // throws. Unoracled BY DESIGN: the round-by-round merge application
+    // is a stateful fold SQL can't express non-recursively — TrainOpsSpec
+    // pins the textbook fixture (low/lower/newest/widest) whose first
+    // five merges are hand-derivable, tie-breaks included.
     "l43_bpe_vocab" -> ((s, d) => bpeMerges(s, LlmOps.tokens(s, d), 5)),
 
     // l48: BPE ENCODE — tokenizer APPLICATION, closing the loop l43's
     // training opens (train the merges → encode the corpus → the token
     // counts every downstream op budgets with): apply the learned merge
     // rules in rank order to every word and report each document's true
-    // post-BPE token count next to its character baseline. The encode
-    // runs on the DISTINCT-TERM VOCABULARY, not the token stream — the
-    // decisive scale move for any tokenizer: merge-fold cost is
-    // ∝ vocabulary (thousands; sub-linear in corpus by Heaps' law) and
-    // the corpus-sized work is ONE broadcast join of per-doc term
-    // counts against the tiny (term → n_syms) table (at web scale the
-    // vocab outgrows broadcast and the join re-keys on term — same
-    // plan, bigger exchange). Each rank's rule is one exhaustive
-    // left-to-right fold ([[applyMerge]], shared with the trainer);
-    // five ranks nest as five codegen'd aggregates in ONE projection.
-    // Unoracled for l43's reason (the stateful fold is not expressible
-    // in non-recursive SQL); TrainOpsSpec pins the textbook fixture's
-    // hand-derivable encodings AND fuzzes the vocab encoder against a
-    // sequential reference on random corpora.
+    // post-BPE token count next to its character baseline. Training and
+    // encoding share ONE collected word histogram and ONE greedy-leftmost
+    // merge fold ([[bpeEncode]]): encoding each distinct word in rank
+    // order replays the trainer's rounds, so the (term → n_syms) table
+    // is vocabulary-sized (sub-linear in corpus by Heaps' law) and the
+    // corpus-sized work is ONE broadcast join of per-doc term counts
+    // against it (at web scale the vocab outgrows broadcast and the join
+    // re-keys on term — same plan, bigger exchange). Unoracled for l43's
+    // reason; TrainOpsSpec pins the textbook fixture's hand-derivable
+    // encodings AND fuzzes the encoder against a sequential reference
+    // on random corpora.
     "l48_bpe_encode" -> ((s, d) => {
+      import s.implicits._
       val toks = LlmOps.tokens(s, d).select("doc_id", "term")
-      val merges = bpeMerges(s, LlmOps.tokens(s, d), 5)
-        .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-      val vocab = bpeEncodeVocab(toks, merges)
-        .select(col("term"), size(col("syms")).as("n_syms"))
+      val hist = bpeHistogram(toks)
+      val merges = bpeTrain(hist, 5).map { case (_, l, r, _) => (l, r) }
+      val vocab = bpeEncode(hist.map(_._1), merges).toSeq
+        .map { case (term, syms) => (term, syms.length) }.toDF("term", "n_syms")
       toks.groupBy("doc_id", "term").agg(count(lit(1)).as("n"))
         .join(broadcast(vocab), "term")
         .groupBy("doc_id")

@@ -353,8 +353,8 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("l43 bpeMerges == naive reference BPE on random corpora") {
-    // the distributed trainer (pair explode → argmax → lookahead-fold
-    // rewrite) must agree with a straightforward sequential BPE — same
+    // the trainer (collected word histogram → in-memory rounds) must
+    // agree with a straightforward sequential BPE — same
     // (freq DESC, pair lex) tie-break, same greedy left-to-right merge
     // application — on arbitrary word mixes, including corpora that
     // EXHAUST (fully merge) before the round budget

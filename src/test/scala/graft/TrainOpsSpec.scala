@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -686,12 +687,41 @@ class TrainOpsSpec extends AnyFunSuite {
       (4, "l", "o", 7L), (5, "lo", "w", 7L)), s"got ${m.toSeq}")
   }
 
-  test("l48: textbook merges encode the fixture words to their hand-derived symbol sequences") {
+  test("l43: the merge rounds launch no Spark job") {
+    // the rounds run in memory over the collected word histogram, so one
+    // round and five launch the same jobs: the histogram's aggregation
     import spark.implicits._
+    val toks = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
+      Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).toDF("term")
+    val sc = spark.sparkContext
+    def jobsLaunchedBy(nRounds: Int): Int = {
+      val group = s"l43-bpe-rounds-$nRounds"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+              e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "bpeMerges job count")
+      try graft.operators.TrainOps.bpeMerges(spark, toks, nRounds)
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.GraftListenerBusBridge.waitUntilEmpty(sc)
+        sc.removeSparkListener(listener)
+      }
+      jobs.get
+    }
+    val (one, five) = (jobsLaunchedBy(1), jobsLaunchedBy(5))
+    assert(one > 0, "the histogram collect launched no job: the listener saw nothing")
+    assert(one == five, s"1 round launched $one jobs, 5 rounds $five")
+  }
+
+  test("l48: textbook merges encode the fixture words to their hand-derived symbol sequences") {
     val merges = Seq(("e", "s"), ("es", "t"), ("est", "#"), ("l", "o"), ("lo", "w"))
-    val toks = Seq("low", "lower", "newest", "widest", "lowest").toDF("term")
-    val got = graft.operators.TrainOps.bpeEncodeVocab(toks, merges)
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
+    val terms = Seq("low", "lower", "newest", "widest", "lowest")
+    val got = graft.operators.TrainOps.bpeEncode(terms, merges)
+      .map { case (t, syms) => t -> syms.toList }
     // hand-derivation under the 5 rules, rank order, greedy-leftmost:
     //  low    → l o w #       → (l,o) → lo w # → (lo,w) → low #
     //  lower  → l o w e r #   → lo w e r # → low e r #
@@ -730,8 +760,8 @@ class TrainOpsSpec extends AnyFunSuite {
       // learn real merges from this corpus, then encode with them
       val merges = graft.operators.TrainOps.bpeMerges(spark, toks, 4)
         .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-      val got = graft.operators.TrainOps.bpeEncodeVocab(toks, merges)
-        .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
+      val got = graft.operators.TrainOps.bpeEncode(words, merges)
+        .map { case (t, syms) => t -> syms.toList }
       val want = words.map { t =>
         val start = t.split("").toList :+ "#"
         t -> merges.foldLeft(start) { case (syms, (l, r)) => refApply(syms, l, r) }

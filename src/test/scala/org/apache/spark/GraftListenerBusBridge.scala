@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Test bridge to the `private[spark]` listener bus: lets a spec wait until
+  * every event posted so far has reached its listeners, instead of
+  * sleeping. Same package-private pattern as
+  * `org.apache.spark.sql.GraftColumnBridge`. */
+object GraftListenerBusBridge {
+  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
