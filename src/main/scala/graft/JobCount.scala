@@ -1,18 +1,19 @@
 package graft
 
+import org.apache.spark.GraftListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Spark-job / stage counter per query key: `runMain graft.JobCount
   * <sfDir> <key>...` builds and fully executes each named
   * `SparkEntry.queries` entry under a registered SparkListener and
-  * prints `key jobs=J stages=S` — the observable behind the r22
-  * driver-loop optimizations (closure round-1 specialization, BPE lazy
-  * checkpoint fusion), whose wins are jobs-per-key rather than
-  * final-plan shape (the loops run at DataFrame-construction time, so
-  * `explain` shows only the final assembly over checkpoint scans).
-  * Counts include the jobs launched while CONSTRUCTING the frame (the
-  * driver-side loops) plus the one materializing action. */
+  * prints `key jobs=J stages=S` — the observable for driver-loop
+  * changes (connected-components rounds, BPE merge rounds), whose wins
+  * are jobs-per-key rather than final-plan shape (the loops run at
+  * DataFrame-construction time, so `explain` shows only the final
+  * assembly over checkpoint scans). Counts include the jobs launched
+  * while CONSTRUCTING the frame (the driver-side loops) plus the one
+  * materializing action. */
 object JobCount {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, keys @ _*) = args
@@ -39,12 +40,13 @@ object JobCount {
       catch { case e: Throwable => println(s"(warm $k failed: ${e.getMessage})") }
     }
     keys.foreach { k =>
-      // let listener events from prior keys drain before snapshotting
-      Thread.sleep(500) // listener bus is async; let events drain
+      // the listener bus is async: deliver every event posted so far
+      // (prior keys' jobs) before the snapshot, and this key's after it
+      GraftListenerBusBridge.waitUntilEmpty(spark.sparkContext)
       val j0 = jobs.get(); val s0 = stages.get()
       try {
         SparkEntry.queries(k)(spark, sfDir).queryExecution.toRdd.count()
-        Thread.sleep(500) // listener bus is async; let events drain
+        GraftListenerBusBridge.waitUntilEmpty(spark.sparkContext)
         println(s"$k jobs=${jobs.get() - j0} stages=${stages.get() - s0}")
       } catch { case e: Throwable => println(s"$k FAILED: ${e.getMessage}") }
     }

@@ -115,147 +115,75 @@ object LlmOps {
     df
   }
 
-  /** Connected components over a SYMMETRIC edge list `(a_id, b_id)` by
-    * iterated min-label propagation: every node starts labelled with its own
-    * id; each round every node adopts the min label among itself and its
-    * neighbours; fixpoint = each component labelled by its min member.
+  /** Connected components of the graph whose edges are the `(a_id, b_id)`
+    * rows of `edges`, labelled over `ids`: `(doc_id, cluster_id)`, where
+    * `cluster_id` is the smallest id in the doc's component and a doc with
+    * no edge is labelled with its own id. Returns the labels and the
+    * number of rounds run.
     *
-    * One-hop min-neighbour (the previous formulation) is wrong for
-    * chain-shaped clusters: A~B~C with A≁C left C labelled B while B was
-    * labelled A. Propagation closes the chain in O(component diameter)
-    * rounds — near-dup components are cliques or short chains, so 1–2
-    * rounds in practice; each round is ONE shuffle (join + min-agg on id).
-    * Labels are localCheckpoint'd per round: iterative lineage would
-    * otherwise grow exponentially, and the blocks release on GC. The
-    * per-round convergence test is an aggregate action (a count), never a
-    * driver-side collect of the labels themselves. At 100 TB you would
-    * checkpoint rounds to durable storage and switch to large-star/
-    * small-star [CC in MapReduce, Kiveris et al.] past ~10 rounds; the
-    * capped loop + fail-loud guard keeps that boundary explicit. */
-  private[graft] def minLabelClosure(ids: DataFrame, edges: DataFrame): DataFrame = {
-    // the CALLER owns edge materialization (j2/l1 pass an already-
-    // localCheckpoint'd pair list); checkpointing again here would cache a
-    // second copy of the same blocks and run a redundant materialization
-    val e = edges
-    // loop state is restricted to nodes that HAVE an edge (a_id covers all
-    // of them — the edge list is symmetric): at corpus scale the duplicate
-    // subgraph is orders of magnitude smaller than the corpus, so each
-    // round shuffles O(dup docs), not O(corpus); everything else is a
-    // singleton component handled by the final left join.
-    //
-    // ROUND 1 SPECIALIZED (r22, VERDICT r21 task 3): with every node
-    // initially labelled by its own id, round 1's neighbour-min is just
-    // min(b_id) per a_id — ONE groupBy straight off the edge list, no
-    // init-distinct frame, no label join. And round 1 is PROVABLY never
-    // the fixpoint on a nonempty symmetric edge list: any edge appears
-    // in both directions, and the direction (a, b) with b < a lowers
-    // a's label — so its convergence count is a job that can only say
-    // "continue" and is skipped. (Empty edge list: labels is empty, the
-    // loop's first iteration counts 0 changes over an empty frame and
-    // exits — same fixpoint, one trivially-empty round.) Net per call:
-    // one fewer Spark job and two fewer exchanges than the generic
-    // round-1 the r21 form ran.
-    var labels = e.groupBy(col("a_id").as("doc_id"))
-      .agg(min(col("b_id")).as("nbr_min"))
-      .select(col("doc_id"),
-        least(col("doc_id"), col("nbr_min")).as("cluster_id"))
-      .localCheckpoint(eager = false)
-    var changed = 1L
-    var rounds = 1
-    val maxRounds = 30 // 30 rounds of chain diameter — unreachable in practice
-    while (changed > 0 && rounds < maxRounds) {
-      val nbrMin = e.join(labels, e("b_id") === labels("doc_id"))
-        .groupBy(e("a_id").as("doc_id")).agg(min(col("cluster_id")).as("nbr_min"))
-      // carry both old and new label through ONE checkpoint; the
-      // convergence count doubles as the materializing action (one Spark
-      // job per round), and later rounds read the cached blocks
-      val step = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster_id").as("old_id"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
-            .as("cluster_id"))
-        .localCheckpoint(eager = false)
-      changed = step.filter(col("cluster_id") < col("old_id")).count()
-      labels = step.select("doc_id", "cluster_id")
-      rounds += 1
-    }
-    require(changed == 0, s"label propagation did not converge in $maxRounds rounds")
-    ids.select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-  }
-
-  /** [[minLabelClosure]] with POINTER DOUBLING: each round hooks (adopt the
-    * min label among self + neighbours — one shuffle, same as the plain
-    * closure) and then SHORTCUTS L(u) ← min(L(u), L(L(u))) via a self-join
-    * of the label table on the label value. Hook alone moves a label one
-    * hop per round (rounds = component diameter); the shortcut jumps to
-    * wherever the label's own node has already reached, so the covered
-    * distance ~doubles per round and convergence is O(log diameter) — the
-    * per-round doubling that makes large-star/small-star [CC in MapReduce,
-    * Kiveris et al.] viable on path-shaped components. PropertySpec pins
-    * equality with union-find on random graphs AND ≤15 rounds on a planted
-    * 256-node path — the graph the plain closure's 30-round cap fail-louds
-    * on (also pinned). Trade-off: the shortcut costs a SECOND shuffle per
-    * round, which buys nothing on clique/hub components (1–2 rounds either
-    * way); it pays off when component diameter is unknown or grows with
-    * scale. Consumers: l32 (user-facing clustering — ARBITRARY verified-
-    * pair graph) and, since r22, l1 (the Hamming-≤3 simhash graph was
-    * MEASURED chain-shaped: 13/15/26 plain rounds at sf0.1/8×/32× — one
-    * clone step from the 30-round cap — vs 8/12/10 pointer-doubling; see
-    * OPTIMIZATION_r22.md); l50 (arbitrary verified-pair graph, like
-    * l32). j2/l12 keep the plain closure: their graphs are gated on
-    * EXACT similarity (Jaccard/cosine), whose bimodal scores yield
-    * cliquey components (j2's whole key runs 22 jobs vs l1's 98 under
-    * the same kernel — JobCount r22), so the second shuffle would be
-    * pure overhead there.
+    * Alternating large-star / small-star [Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014]. The state is the
+    * edge list oriented `(hi, lo)`, hi > lo. Both steps rewire edges
+    * without changing connectivity:
+    *  - large-star: each edge (v, u) becomes (v, m(u)), where m(u) is the
+    *    smallest of u and its neighbours. One window on the node over
+    *    both orientations;
+    *  - small-star: each node hangs itself and its lower neighbours off
+    *    the smallest of them. One `groupBy` on the node; its `collect_set`
+    *    drops duplicate edges, so a round never returns more rows than it
+    *    read.
+    * A round is a large-star step and then a small-star step, and it
+    * flags the rows of every node either step rewired. A round without a
+    * flag leaves the edge set as it found it. That fixpoint is a forest of
+    * stars rooted at their component's minimum: large-star leaves no node
+    * with both a lower and a higher neighbour, small-star no node with two
+    * lower ones. Each leaf's single edge then carries its label.
     *
-    * Label values are always ids of nodes inside the label table (own ids
-    * initially, mins of those afterwards), so the shortcut join always
-    * finds its target; the left join + coalesce keeps the frame total
-    * anyway. Returns (labels over `ids`, rounds ran) — the round count is
-    * the observable the log-convergence spec pins. */
-  private[graft] def minLabelClosureLog(ids: DataFrame, edges: DataFrame): (DataFrame, Int) = {
-    val e = edges
-    // round 1 specialized like [[minLabelClosure]] (r22): the hook over
-    // self-labels is min(b_id) per a_id straight off the edge list, the
-    // shortcut then jumps through that hooked table as usual, and the
-    // convergence count is skipped — round 1 always changes a label on a
-    // nonempty symmetric edge list (see the plain closure's proof).
-    val hooked1 = e.groupBy(col("a_id").as("doc_id"))
-      .agg(min(col("b_id")).as("nbr_min"))
-      .select(col("doc_id"),
-        least(col("doc_id"), col("nbr_min")).as("cluster_id"))
-    val ptr1 = hooked1
-      .select(col("doc_id").as("p_id"), col("cluster_id").as("p_lab"))
-    var labels = hooked1.join(ptr1, hooked1("cluster_id") === ptr1("p_id"), "left")
-      .select(col("doc_id"),
-        least(col("cluster_id"), coalesce(col("p_lab"), col("cluster_id")))
-          .as("cluster_id"))
-      .localCheckpoint(eager = false)
-    var changed = 1L
-    var rounds = 1
-    val maxRounds = 20 // log2(diameter) + slack; 2^20-hop paths don't happen
-    while (changed > 0 && rounds < maxRounds) {
-      val nbrMin = e.join(labels, e("b_id") === labels("doc_id"))
-        .groupBy(e("a_id").as("doc_id")).agg(min(col("cluster_id")).as("nbr_min"))
-      val hooked = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster_id").as("old_id"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
-            .as("cluster_id"))
-      val ptr = hooked
-        .select(col("doc_id").as("p_id"), col("cluster_id").as("p_lab"))
-      val step = hooked.join(ptr, hooked("cluster_id") === ptr("p_id"), "left")
-        .select(col("doc_id"), col("old_id"),
-          least(col("cluster_id"), coalesce(col("p_lab"), col("cluster_id")))
-            .as("cluster_id"))
-        .localCheckpoint(eager = false)
-      changed = step.filter(col("cluster_id") < col("old_id")).count()
-      labels = step.select("doc_id", "cluster_id")
-      rounds += 1
+    * Invariants:
+    *  - `edges` may hold either orientation, duplicates and self-pairs;
+    *  - each round is one `localCheckpoint` (the iterated lineage would
+    *    otherwise grow with every round) and one count of flagged rows,
+    *    which is both the job that materialises the round and the
+    *    convergence test; the edges are never collected. Round 1 is not
+    *    counted: that test could only spare round 2 on graphs that are
+    *    stars already, and leaving it out spares a job on every other;
+    *  - the loop ends on convergence, with no round cap: the alternating
+    *    algorithm converges in O(log² n) rounds (Kiveris et al.), and
+    *    `PropertySpec` pins at most 2·⌈log₂ n⌉ on shuffled paths and
+    *    clique chains;
+    *  - the state holds only nodes that have an edge, so a round shuffles
+    *    O(duplicate docs), not O(corpus); the final join labels the rest. */
+  private[graft] def connectedComponents(ids: DataFrame,
+      edges: DataFrame): (DataFrame, Int) = {
+    def round(e: DataFrame): DataFrame = {
+      val large = e.select(col("lo").as("node"), col("hi").as("nbr"))
+        .union(e.select(col("hi").as("node"), col("lo").as("nbr")))
+        .withColumn("m", least(col("node"),
+          min(col("nbr")).over(Window.partitionBy("node"))))
+        .filter(col("nbr") > col("node"))
+        .select(col("nbr").as("hi"), col("m").as("lo"),
+          (col("m") < col("node")).as("changed"))
+      large.groupBy("hi")
+        .agg(collect_set(col("lo")).as("los"),
+          bool_or(col("changed")).as("changed"))
+        .select(col("hi"), col("los"), array_min(col("los")).as("m"),
+          (col("changed") || size(col("los")) > 1).as("changed"))
+        .select(
+          explode(concat(array_remove(col("los"), col("m")), array(col("hi"))))
+            .as("hi"),
+          col("m").as("lo"), col("changed"))
     }
-    require(changed == 0,
-      s"pointer-doubling closure did not converge in $maxRounds rounds")
+    var e = edges.filter(col("a_id") =!= col("b_id"))
+      .select(greatest(col("a_id"), col("b_id")).as("hi"),
+        least(col("a_id"), col("b_id")).as("lo"))
+    var changed = 1L
+    var rounds = 0
+    while (changed > 0) {
+      e = round(e).localCheckpoint(eager = false)
+      rounds += 1
+      if (rounds > 1) changed = e.filter(col("changed")).count()
+    }
+    val labels = e.select(col("hi").as("doc_id"), col("lo").as("cluster_id"))
     (ids.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -334,12 +262,12 @@ object LlmOps {
         .filter(size(array_intersect(col("sa"), col("sb"))) * 5 >=
           size(array_union(col("sa"), col("sb"))) * 4)
         .select("a_id", "b_id")
-        .localCheckpoint(eager = false) // consumed by n_dups AND the closure loop
+        .localCheckpoint(eager = false) // consumed by n_dups AND the clustering
       val nDups = pairs.groupBy(col("a_id").as("doc_id"))
         .agg(count(lit(1)).as("n_dups"))
-      // transitive cluster id: min doc_id of the CONNECTED COMPONENT, so
-      // chain-shaped clusters (A~B~C with A≁C) get one consistent id
-      val clusters = minLabelClosure(docs.select("doc_id"), pairs)
+      // cluster id: min doc_id of the connected component, so chain-shaped
+      // clusters (A~B~C with A≁C) get one consistent id
+      val clusters = connectedComponents(docs.select("doc_id"), pairs)._1
       clusters.join(nDups, Seq("doc_id"), "left")
         .select(col("doc_id"), col("cluster_id"),
           coalesce(col("n_dups"), lit(0L)).as("n_dups"))

@@ -197,47 +197,18 @@ object TrainOps {
       .select(col("doc_id"), (sig + overflowGuard).as("simhash"))
   }
 
-  // (The retired 64-scalar-lane vote form was measured against the packed
-  // form in r21 via temporary twin bench keys — signature stage 0.617 s →
-  // 0.499 s min-of-6 same-interval, outputs bit-identical at sf0.1; see
-  // OPTIMIZATION_r21.md. The twins were removed after the measurement.)
-
-  // (The retired 4×16-bit packing was A/B'd against the 2×32-bit form in
-  // r22 via temporary twin bench keys — signature stage 0.678 vs 0.750 s
-  // min-of-6 same-interval: the widened envelope costs ~0.07 s at the
-  // stage, ~2% of the l1 key, accepted to remove the fail-loud-at-2^16
-  // semantics hazard; see OPTIMIZATION_r22.md. Twins removed after the
-  // measurement.)
-
-  /** The l1 pipeline over a signature frame (split from the key entry for
-    * the r21 vote-packing A/B — both signature forms feed the identical
-    * downstream): band-join candidates, Hamming-gate, n_dups + transitive
-    * closure, contract sort. */
-  private[graft] def l1Pipeline(s: SparkSession, rawSigs: DataFrame,
-      logClosure: Boolean = true): DataFrame = {
-    // materialized once: consumed by the band join, the closure seed,
+  /** The l1 pipeline over a signature frame: band-join candidates,
+    * Hamming-gate, n_dups + connected components, contract sort. */
+  private[graft] def l1Pipeline(rawSigs: DataFrame): DataFrame = {
+    // materialized once: consumed by the band join, the clustering's ids,
     // and the final output join — the 64-bit-vote aggregation over every
     // token is the expensive part and must not re-run per consumer
     val sigs = rawSigs.localCheckpoint(eager = false)
     val pairs = simhashBandPairsRaw(sigs)
-      .localCheckpoint(eager = false) // consumed by n_dups AND the closure loop
+      .localCheckpoint(eager = false) // consumed by n_dups AND the clustering
     val nDups = pairs.groupBy(col("a_id").as("doc_id"))
       .agg(count(lit(1)).as("n_dups"))
-    // transitive component id via min-label propagation — the POINTER-
-    // DOUBLING variant since r22: the Hamming-≤3 simhash graph is NOT
-    // cliquey (unlike j2's exact-Jaccard-gated graph) — its coarse
-    // 64-bit signature space chains distinct near-identical docs, and
-    // the plain O(diameter) closure was MEASURED (RoundProbe, committed
-    // numbers in OPTIMIZATION_r22.md) at 13 rounds on sf0.1 / 15 at 8× /
-    // 26 at 32× — one clone step from the 30-round fail-loud cap, i.e.
-    // the declared query would ABORT at scale. Pointer doubling stays
-    // bounded (8/12/10 rounds at 1×/8×/32×) and shuffles the full edge
-    // list correspondingly fewer times; same fixpoint (min label per
-    // component — PropertySpec union-find equality pins both kernels),
-    // oracle-verified identical output at sf0.1.
-    val clusters =
-      if (logClosure) LlmOps.minLabelClosureLog(sigs.select("doc_id"), pairs)._1
-      else LlmOps.minLabelClosure(sigs.select("doc_id"), pairs)
+    val clusters = LlmOps.connectedComponents(sigs.select("doc_id"), pairs)._1
     sigs.join(clusters, Seq("doc_id"))
       .join(nDups, Seq("doc_id"), "left")
       .select(col("doc_id"), col("simhash"), col("cluster_id"),
@@ -248,8 +219,8 @@ object TrainOps {
   /** The l1 candidate-pair production over the (checkpointed) signature
     * frame — split out (r19, VERDICT r18 task 2) so PlanShapeSpec can pin
     * the band equi-join's physical shape: inside the key the resulting
-    * pair frame is localCheckpointed (it feeds n_dups AND the closure
-    * loop), and a checkpoint scan hides this subtree from the key's
+    * pair frame is localCheckpointed (it feeds n_dups AND the
+    * clustering), and a checkpoint scan hides this subtree from the key's
     * executed plan. Band key = (16-bit signature slice)·4 + position, so
     * equal slice values in different band positions never collide.
     *
@@ -297,10 +268,10 @@ object TrainOps {
     * with p ≈ 0.97, while a random pair (cos ≈ 0) collides with
     * p ≈ 8/2^16 — candidate fan-out is ~n²/2^16 per band, NOT n².
     * Candidates then pass an EXACT cosine ≥ threshold check, and
-    * components close transitively via min-label propagation (shared
-    * with j2/l1). Banding is approximate by design (it can miss a pair
-    * near the threshold), but the exact-verify layer kills false
-    * positives, so since r15 the key is ORACLED against the brute-forced
+    * clusters are the connected components of the verified pairs
+    * ([[LlmOps.connectedComponents]]). Banding is approximate by design
+    * (it can miss a pair near the threshold), but the exact-verify layer
+    * kills false positives, so since r15 the key is ORACLED against the brute-forced
     * all-pairs ground truth (matches whenever recall is 1.0 on the
     * corpus — see the l12 oracle's comment); TrainOpsSpec keeps the
     * recall ≥ 0.9 pin against brute force on planted clusters plus
@@ -337,14 +308,15 @@ object TrainOps {
         col("embedding").as("eb"), col("norm").as("nb")), "b_id")
       .filter(floatDot(col("ea"), col("eb")) / (col("na") * col("nb")) >= threshold)
       .select("a_id", "b_id")
-    // symmetric edge list: feeds the closure AND the neighbour count
+    // symmetric edge list: n_dups counts both ends of a pair; the
+    // clustering reads the same materialised rows
     val edges = pairs
       .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .localCheckpoint(eager = false)
     val nDups = edges.groupBy(col("a_id").as("vec_id"))
       .agg(count(lit(1)).as("n_dups"))
-    val clusters = LlmOps.minLabelClosure(
-      sigs.select(col("vec_id").as("doc_id")), edges)
+    val clusters = LlmOps.connectedComponents(
+      sigs.select(col("vec_id").as("doc_id")), edges)._1
     sigs.select("vec_id")
       .join(clusters.withColumnRenamed("doc_id", "vec_id"), "vec_id")
       .join(nDups, Seq("vec_id"), "left")
@@ -841,13 +813,7 @@ object TrainOps {
     // qualifying pair shares >= 1 intact band) — the banded join is a pure
     // optimization of all-pairs, and the oracle brute-forces it exactly.
     // TrainOpsSpec additionally pins exact duplicates + pair sanity.
-    // (closure-variant A/B, r22: temporary x_l1_plain/x_l1_log twins
-    // measured min-of-6 same-interval at sf0.1 — plain 3.024 s vs log
-    // 2.705 s (−10.5%) — and min-of-2 on one 32× ScaleSmoke clone —
-    // plain 39.72 s vs log 29.51 s (−26%). Twins removed after the
-    // measurement; see l1Pipeline's closure comment and
-    // OPTIMIZATION_r22.md.)
-    "l1_dedup_simhash" -> ((s, d) => l1Pipeline(s, simhashed(s, d))),
+    "l1_dedup_simhash" -> ((s, d) => l1Pipeline(simhashed(s, d))),
 
     // l2: embedding-space near-dup — per-vector nearest neighbour by
     // cosine + dup flag at 0.95. Exact all-pairs argmax is the correctness
@@ -1137,20 +1103,16 @@ object TrainOps {
     // the BEST copy — the cluster member maximizing the l5 quality
     // composite (quantized to an integer 1e-4 grid so the argmax can
     // never ride a float boundary), ties broken by min doc_id. Reuses
-    // l32's exact clusters (verifiedPairs + min-label closure — one
-    // computation per session via sharedFrame) and l5's exact scoring;
+    // l32's exact clusters (the shared verifiedPairs frame through
+    // LlmOps.connectedComponents) and l5's exact scoring;
     // emits the full per-doc ledger (cluster, quality, survivor, kept)
     // — the auditable artifact, not just the survivor list. Scale: the
     // quality agg rides the tokenizer's doc_id grouping; the survivor
     // window partitions by cluster_id over (id, cluster, q) triples —
     // partition size = dup-cluster size, text never shuffles.
     "l50_dedup_survivor_select" -> ((s, d) => {
-      val pairs = verifiedPairs(s, d).select("a_id", "b_id")
-      val edges = pairs
-        .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-        .localCheckpoint(eager = false)
-      val clusters = LlmOps.minLabelClosureLog(
-        t(s, d, "documents").select("doc_id"), edges)._1
+      val clusters = LlmOps.connectedComponents(
+        t(s, d, "documents").select("doc_id"), verifiedPairs(s, d))._1
       val stop = Seq("the", "a", "of", "and")
       val q = LlmOps.tokens(s, d)
         .groupBy("doc_id")
@@ -2116,30 +2078,17 @@ object TrainOps {
     // keep/drop list a 100-TB dedup job ships. Pairs ARE the shared
     // verifiedPairs frame — the l9 key's exact output (the ORACLED
     // exact-Jaccard producer), materialized once per session; the
-    // closure is LlmOps.minLabelClosure — the same hash-to-min propagation
-    // j2/l1/l12 already rely on internally, promoted here to a first-class
-    // DuckDB-oracled key (recursive-CTE min-reachability). The sf0.01 dup
-    // graph is 22 pairs + one TRIANGLE (similarity is bimodal there), so
-    // the hash pins end-to-end pair production + labels/sizes/flags but
-    // NOT transitivity; the chain case a one-hop formulation gets wrong
-    // is pinned by TrainOpsSpec's planted 3-doc chain run through this
-    // whole query, and by PropertySpec's random-graph union-find
-    // property on the closure itself. Scale: closure
-    // state is (doc_id, cluster_id) longs for dup-subgraph nodes ONLY
-    // (singletons re-join at the end), each round shuffles O(dup docs) —
-    // never text — and this key uses minLabelClosureLog, the pointer-
-    // doubling (hook + shortcut) variant, so rounds are O(log component
-    // diameter): the user-facing clustering key takes an ARBITRARY
-    // verified-pair graph, and a path-shaped component must not cost
-    // diameter rounds (PropertySpec pins ≤15 rounds on a 256-node path,
-    // where the plain closure's 30-round cap fail-louds).
+    // clusters are LlmOps.connectedComponents of those pairs, the kernel
+    // j2/l1/l12/l50 use too, here as a DuckDB-oracled key of its own
+    // (recursive-CTE min-reachability). The sf0.01 dup graph is 22 pairs
+    // + one TRIANGLE (similarity is bimodal there), so the hash pins
+    // end-to-end pair production + labels/sizes/flags but NOT
+    // transitivity; the chain case a one-hop formulation gets wrong is
+    // pinned by TrainOpsSpec's planted 3-doc chain run through this whole
+    // query, and by PropertySpec's union-find property on the kernel.
     "l32_dedup_cluster_cc" -> ((s, d) => {
-      val pairs = verifiedPairs(s, d).select("a_id", "b_id")
-      val edges = pairs
-        .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-        .localCheckpoint(eager = false) // re-read every closure round
-      val clusters = LlmOps.minLabelClosureLog(
-        t(s, d, "documents").select("doc_id"), edges)._1
+      val clusters = LlmOps.connectedComponents(
+        t(s, d, "documents").select("doc_id"), verifiedPairs(s, d))._1
       val csize = clusters.groupBy("cluster_id").agg(count(lit(1)).as("csize"))
       clusters.join(csize, "cluster_id")
         .select(col("doc_id"), col("cluster_id"), col("csize"),
@@ -3158,8 +3107,8 @@ object TrainOps {
     // l9's pair CTEs verbatim (prefix filtering is lossless, so the full
     // inverted-index join is the same pair set), then min-reachability by
     // recursive CTE: r holds every (src, reachable node); min(dst) per src
-    // IS the component minimum — the same label minLabelClosure converges
-    // to. UNION (distinct) bounds the recursion.
+    // IS the component minimum, the label LlmOps.connectedComponents
+    // gives. UNION (distinct) bounds the recursion.
     // l32's closure + l5's quality (both verbatim), argmax per cluster
     // on the integer 1e-4 grid, ties to min doc_id
     "l50_dedup_survivor_select" ->

@@ -96,89 +96,77 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("minLabelClosure == union-find connected components on random graphs") {
-    val rnd = new Random(13)
+  /** Labels `connectedComponents` gives the graph on ids 0 until n with
+    * `edges`, checked against driver-side union-find with min-root merging
+    * (which labels every component by its min member, as the kernel must).
+    * Returns the kernel's round count. */
+  private def componentsMatchUnionFind(n: Int, edges: Seq[(Long, Long)]): Int = {
     import spark.implicits._
-    (1 to 5).foreach { _ =>
-      val n = 5 + rnd.nextInt(30)
-      val ids = (0L until n).toSeq
-      // sparse random edges, including the occasional long chain
-      val edges = (Seq.fill(n / 2)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)) ++
-        (0 until rnd.nextInt(4)).map(i => (i.toLong, (i + 1).toLong)))
-        .filter { case (a, b) => a != b }
-      // reference: driver-side union-find
-      val parent = scala.collection.mutable.ArrayBuffer.range(0L, n)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r.toInt) != r) r = parent(r.toInt)
-        r
+    val parent = scala.collection.mutable.ArrayBuffer.range(0L, n.toLong)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r.toInt) != r) r = parent(r.toInt)
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent((ra max rb).toInt) = ra min rb
+    }
+    val expected = (0L until n).map(i => i -> find(i)).toMap
+    val (labels, rounds) = operators.LlmOps.connectedComponents(
+      (0L until n).toDF("doc_id"), edges.toDF("a_id", "b_id"))
+    val rows = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(rows.length == n && rows.toMap == expected, s"n=$n edges=${edges.take(40)}")
+    rounds
+  }
+
+  test("connectedComponents == union-find connected components on random graphs") {
+    // two seeded families of sparse random graphs with the occasional
+    // chain, each fed as generated (either orientation, self-pairs,
+    // duplicates) and as the symmetric list j2/l1/l12 pass
+    Seq(13, 29).foreach { seed =>
+      val rnd = new Random(seed)
+      (1 to 5).foreach { _ =>
+        val n = 5 + rnd.nextInt(30)
+        val edges = Seq.fill(n / 2)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)) ++
+          (0 until rnd.nextInt(4)).map(i => (i.toLong, (i + 1).toLong))
+        componentsMatchUnionFind(n, edges)
+        componentsMatchUnionFind(n, (edges ++ edges.map(_.swap)).distinct)
       }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent((ra max rb).toInt) = ra min rb
-      }
-      val expected = ids.map(i => i -> find(i)).toMap
-      // closure operates on a SYMMETRIC edge list, like j2/l1 feed it
-      val sym = (edges ++ edges.map(_.swap)).distinct
-      val got = operators.LlmOps.minLabelClosure(
-          ids.toDF("doc_id"), sym.toDF("a_id", "b_id"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // min-label closure labels every component by its min member, which
-      // is exactly what path-compressed union-find with min-root merging gives
-      assert(got == expected, s"n=$n edges=$sym")
+    }
+    // every id order of a 5-node path, one per reversal pair: on some of
+    // them large-star reaches its fixpoint a round before small-star does,
+    // so the convergence test must count small-star's rewiring too
+    (0L until 5).permutations.filter(p => p.head < p.last).foreach { p =>
+      componentsMatchUnionFind(5, p.zip(p.tail))
     }
   }
 
-  test("minLabelClosureLog == union-find connected components on random graphs") {
-    val rnd = new Random(29)
-    import spark.implicits._
-    (1 to 5).foreach { _ =>
-      val n = 5 + rnd.nextInt(30)
-      val ids = (0L until n).toSeq
-      val edges = (Seq.fill(n / 2)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)) ++
-        (0 until rnd.nextInt(4)).map(i => (i.toLong, (i + 1).toLong)))
-        .filter { case (a, b) => a != b }
-      val parent = scala.collection.mutable.ArrayBuffer.range(0L, n)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r.toInt) != r) r = parent(r.toInt)
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent((ra max rb).toInt) = ra min rb
-      }
-      val expected = ids.map(i => i -> find(i)).toMap
-      val sym = (edges ++ edges.map(_.swap)).distinct
-      val got = operators.LlmOps.minLabelClosureLog(
-          ids.toDF("doc_id"), sym.toDF("a_id", "b_id"))._1
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"n=$n edges=$sym")
+  test("connectedComponents: paths and clique chains converge in ≤ 2·⌈log₂ n⌉ rounds") {
+    // Shapes whose component diameter grows with n. Min-label propagation
+    // needs a round per hop; pointer doubling halves the hops only when
+    // ids increase along the path, so shuffled ids defeat it. Large-star /
+    // small-star stays within the bound whatever the id order.
+    def shuffled(n: Int, edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+      val perm = new Random(2).shuffle((0L until n).toVector)
+      edges.map { case (a, b) => (perm(a.toInt), perm(b.toInt)) }
     }
-  }
-
-  test("minLabelClosureLog: 256-node path converges in O(log n) rounds; plain closure can't") {
-    // The graph the doubling variant exists for: a path 0-1-…-255 has
-    // component diameter 255, so plain min-label propagation needs 255
-    // rounds — its 30-round convergence cap fail-louds (by design: that
-    // cap IS the "switch algorithms past this shape" boundary the
-    // scaladoc declares). The hook+shortcut variant must label the whole
-    // path with 0 in ≤15 rounds (measured ~10: covered distance roughly
-    // doubles per round, 2^10 > 255, +1 round to observe convergence).
-    import spark.implicits._
-    val n = 256
-    val ids = (0L until n).toDF("doc_id")
-    val path = (0L until n - 1).map(i => (i, i + 1))
-    val sym = (path ++ path.map(_.swap)).toDF("a_id", "b_id")
-    val (labels, rounds) = operators.LlmOps.minLabelClosureLog(ids, sym)
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (0L until n).map(_ -> 0L).toMap, "path not fully contracted")
-    assert(rounds <= 15, s"pointer doubling took $rounds rounds on a 256-path")
-    val plain = intercept[IllegalArgumentException] {
-      operators.LlmOps.minLabelClosure(ids, sym).count()
+    def path(n: Int) = (0L until n - 1).map(i => (i, i + 1))
+    // 32 five-node cliques, clique c's last node linked to clique c+1's first
+    val cliqueChain = (0 until 32).flatMap { c =>
+      val b = c * 5L
+      (for (i <- 0 until 5; j <- i + 1 until 5) yield (b + i, b + j)) ++
+        (if (c < 31) Seq((b + 4, b + 5)) else Nil)
     }
-    assert(plain.getMessage.contains("did not converge"),
-      s"expected the plain closure's convergence cap to fire: ${plain.getMessage}")
+    Seq(
+      ("ordered 256-node path", 256, path(256)),
+      ("shuffled 1024-node path", 1024, shuffled(1024, path(1024))),
+      ("shuffled chain of 32 five-cliques", 160, shuffled(160, cliqueChain))
+    ).foreach { case (name, n, edges) =>
+      val rounds = componentsMatchUnionFind(n, edges)
+      val bound = 2 * (32 - Integer.numberOfLeadingZeros(n - 1)) // 2·⌈log₂ n⌉
+      assert(rounds <= bound, s"$name: $rounds rounds > $bound")
+    }
   }
 
   test("l13 packing == sequential reference packer on random corpora") {
