@@ -120,20 +120,26 @@ class PropertySpec extends AnyFunSuite {
     rounds
   }
 
-  test("connectedComponents == union-find connected components on random graphs") {
-    // two seeded families of sparse random graphs with the occasional
-    // chain, each fed as generated (either orientation, self-pairs,
-    // duplicates) and as the symmetric list j2/l1/l12 pass
-    Seq(13, 29).foreach { seed =>
-      val rnd = new Random(seed)
-      (1 to 5).foreach { _ =>
-        val n = 5 + rnd.nextInt(30)
-        val edges = Seq.fill(n / 2)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)) ++
-          (0 until rnd.nextInt(4)).map(i => (i.toLong, (i + 1).toLong))
-        componentsMatchUnionFind(n, edges)
-        componentsMatchUnionFind(n, (edges ++ edges.map(_.swap)).distinct)
-      }
+  /** A seeded family of five sparse random graphs with the occasional
+    * chain, each fed as generated (either orientation, self-pairs,
+    * duplicates) and as the symmetric list j2/l1/l12 pass. */
+  private def randomGraphsMatchUnionFind(seed: Int): Unit = {
+    val rnd = new Random(seed)
+    (1 to 5).foreach { _ =>
+      val n = 5 + rnd.nextInt(30)
+      val edges = Seq.fill(n / 2)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)) ++
+        (0 until rnd.nextInt(4)).map(i => (i.toLong, (i + 1).toLong))
+      componentsMatchUnionFind(n, edges)
+      componentsMatchUnionFind(n, (edges ++ edges.map(_.swap)).distinct)
     }
+  }
+
+  test("connectedComponents == union-find connected components on random graphs") {
+    randomGraphsMatchUnionFind(13)
+  }
+
+  test("connectedComponents == union-find on a second seed and every 5-node path order") {
+    randomGraphsMatchUnionFind(29)
     // every id order of a 5-node path, one per reversal pair: on some of
     // them large-star reaches its fixpoint a round before small-star does,
     // so the convergence test must count small-star's rewiring too
