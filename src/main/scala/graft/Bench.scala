@@ -1,187 +1,41 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** HOST-CALIBRATION workload (r18, VERDICT r17 task 1): a pinned,
-    * deterministic, CPU-bound loop run before the first pass and after
-    * the last, EXCLUDED from the suite total. The host VM has two
-    * documented slow modes — 30–60 s stalls (filtered by min-of-N
-    * pass-interleaving) and a SUSTAINED ~1.5–1.6× uniform slowdown
-    * (all of 2026-08-15) that min-of-N cannot filter — and without an
-    * in-session probe a budget read cannot separate "suite got slower"
-    * from "host got slower" except by arguing from cross-session
-    * arrays. Two legs: ST = the loop on one thread (cycle speed), MT =
-    * the SAME per-thread loop on 32 concurrent threads (effective
-    * parallelism; ≈ ST wall time on an uncontended 32-core host).
-    * Slowdown factor = session calib / the best calib recorded in
-    * BASELINE.md; normalized total = raw total / factor. */
-  private def calibChunk(iters: Long, seed: Long): Long = {
-    var x = seed | 1L; var acc = 0L; var i = 0L
-    while (i < iters) { // xorshift64 + odd-constant mix: unvectorizable,
-      x ^= x << 13; x ^= x >>> 7; x ^= x << 17 // serially dependent —
-      acc ^= x * 0x2545F4914F6CDD1DL // measures cycle throughput
-      i += 1
-    }
-    acc
-  }
-  private val CalibIters = 400000000L // ~1 s single-thread, normal host
-  /** Locale-pinned 3-decimal formatter for every double that lands in the
-    * emitted JSON (r18 ADVICE): `f"...%.3f"` uses the default locale, so a
-    * comma-decimal host would print `0,123` — invalid JSON that breaks
-    * fold_bench.py and session_report.py downstream. */
+  /** Locale-pinned 3-decimal formatter for the doubles in the emitted
+    * JSON: `f"...%.3f"` uses the default locale, so a comma-decimal host
+    * would print `0,123` — invalid JSON for every reader of the record. */
   private def f3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-  /** MEMORY-BANDWIDTH leg: the ST loop runs in registers and measured
-    * FULL nominal speed (4.36 cycles/iter at the pinned 2.1 GHz) even
-    * inside r17/r18's sustained ~1.6× suite-slow regime — so that regime
-    * is NOT cycle speed; the plausible mechanism is shared-host memory-
-    * bandwidth contention, which Spark's scan/shuffle-heavy work feels
-    * and a register-only loop cannot. This leg streams a 256 MiB long
-    * array (sequential sums, one disjoint slice per thread on the MT
-    * pass) so the calib tuple separates the two host axes: cycle speed
-    * (st) and memory bandwidth (mem_st / mem_mt). */
-  private val MemWords = 32 * 1024 * 1024 // 256 MiB of longs
-  private lazy val memArr: Array[Long] = {
-    val a = new Array[Long](MemWords)
-    var i = 0
-    while (i < MemWords) { a(i) = i * 0x9E3779B97F4A7C15L; i += 1 }
-    a
-  }
-  private def memSweep(lo: Int, hi: Int, passes: Int): Long = {
-    var acc = 0L; var p = 0
-    while (p < passes) {
-      var i = lo
-      while (i < hi) { acc += memArr(i); i += 1 }
-      p += 1
-    }
-    acc
-  }
-  private def calibrate(): (Double, Double, Double, Double) = {
-    calibChunk(CalibIters / 20, 0x9E3779B97F4A7C15L) // JIT warmup
-    val t0 = System.nanoTime()
-    val sink = new java.util.concurrent.atomic.AtomicLong(
-      calibChunk(CalibIters, 0x9E3779B97F4A7C15L))
-    val st = (System.nanoTime() - t0) / 1e9
-    val threads = (1 to 32).map { i =>
-      new Thread(() => { sink.getAndAdd(calibChunk(CalibIters, 1000L + i)): Unit })
-    }
-    val t1 = System.nanoTime()
-    threads.foreach(_.start()); threads.foreach(_.join())
-    val mt = (System.nanoTime() - t1) / 1e9
-    sink.getAndAdd(memSweep(0, MemWords, 1)) // touch + JIT warmup
-    val t2 = System.nanoTime()
-    sink.getAndAdd(memSweep(0, MemWords, 8)) // 2 GiB of sequential traffic
-    val memSt = (System.nanoTime() - t2) / 1e9
-    val slice = MemWords / 32
-    val memThreads = (0 until 32).map { i =>
-      new Thread(() => {
-        sink.getAndAdd(memSweep(i * slice, (i + 1) * slice, 256)): Unit
-      }) // 32 × 8 MiB × 256 passes = 64 GiB aggregate traffic
-    }
-    val t3 = System.nanoTime()
-    memThreads.foreach(_.start()); memThreads.foreach(_.join())
-    val memMt = (System.nanoTime() - t3) / 1e9
-    // consume the accumulator so the loops cannot be dead-code-eliminated
-    System.err.println(
-      f"CALIB st=$st%.3f mt=$mt%.3f mem_st=$memSt%.3f mem_mt=$memMt%.3f (sink=${sink.get()}%x)")
-    (st, mt, memSt, memMt)
-  }
-  /** SPARK-JOB calibration legs (r18, added after session 2's finding):
-    * every process-level probe — cycle speed, parallel throughput,
-    * memory bandwidth — read NORMAL inside a session whose suite ran a
-    * uniform ~1.56× slow (bench_r18_s2.json), so the sustained regime
-    * lives in neither axis; the remaining candidate is task-dispatch /
-    * thread-wakeup latency, which local-mode Spark pays per task and a
-    * hot in-process loop never does. Two pinned, data-independent jobs:
-    * `cpu` = one codegen'd aggregation over range() in 32 core-sized
-    * tasks (dominated by per-row work — tracks the engine's CPU axis);
-    * `sched` = a count over 2048 near-empty tasks (dominated by
-    * scheduler dispatch + wakeup — tracks the machinery axis small
-    * queries live on). Both deterministic, zero data dependence. */
-  private def sparkCalibrate(spark: SparkSession): (Double, Double) = {
-    spark.range(0, 32000000L, 1, 32).selectExpr("sum(id % 1000007)").collect() // warm codegen
-    val t0 = System.nanoTime()
-    spark.range(0, 12800000000L, 1, 32).selectExpr("sum(id % 1000007)").collect()
-    val cpu = (System.nanoTime() - t0) / 1e9
-    spark.range(0, 256, 1, 256).count() // warm the dispatch path
-    val t1 = System.nanoTime()
-    spark.range(0, 2048, 1, 2048).count()
-    val sched = (System.nanoTime() - t1) / 1e9
-    System.err.println(f"CALIB spark_cpu=$cpu%.3f spark_sched=$sched%.3f")
-    (cpu, sched)
-  }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the bench contract is local[32] with shuffle.partitions=32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle/spill on tmpfs: the VM's /tmp sits on a throttled virtio
-      // disk whose multi-second stalls dominate small-query timings
-      .config("spark.local.dir", "/dev/shm/graft_spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // PRE-FLIGHT mode (r19, VERDICT r18 task 1): SPARK_GRAFT_CALIB_ONLY=1
-    // runs ONLY the six-axis calibration tuple (~15 s) and prints a one-
-    // line JSON verdict — the decision rule for whether the host is in a
-    // quiet window (spark_sched <= 1.2 s AND mem_mt <= 0.6 s, the healthy
-    // ranges measured across r17/r18's 28 sessions; see BASELINE.md).
-    // Quiet => run a raw-budget session (expected ~135 s from the 124.4 s
-    // record + startup); not quiet => don't burn a session chasing a raw
-    // number the host cannot print.
-    if (sys.env.get("SPARK_GRAFT_CALIB_ONLY").contains("1")) {
-      val (st, mt, memSt, memMt) = calibrate()
-      val (cpu, sched) = sparkCalibrate(spark)
-      val quiet = sched <= 1.2 && memMt <= 0.6
-      println(s"""{"metric":"calib_preflight","st":${f3(st)},"mt":${f3(mt)},"mem_st":${f3(memSt)},"mem_mt":${f3(memMt)},"spark_cpu":${f3(cpu)},"spark_sched":${f3(sched)},"quiet":$quiet}""")
-      spark.stop()
-      return
-    }
+    val spark = Session.local()
     // fail-loud data profile (see Verify): printed to stderr so the bench's
-    // stdout stays a single JSON line for the driver's parser
+    // stdout stays JSON lines only
     Console.withOut(System.err) { Tables.profileData(spark, sfDir) }
-    // optional args: restrict to these keys (local iteration); the driver
-    // invokes with no args = full suite. SPARK_GRAFT_REPEAT reruns each
-    // query N times and keeps the minimum — steady-state timing. Default 3:
-    // the host VM freezes for 30-60s every few minutes (observed across
-    // runs as a random query spiking 40x), and min-of-2 let one r3 stall
-    // leak through (d4's phantom 7.89 s); all per-run times are emitted
-    // under "runs" so a stall is visible as one outlier among steady runs
+    // optional args: restrict to these keys (local iteration); no args =
+    // full suite. SPARK_GRAFT_REPEAT runs each query N times and keeps the
+    // minimum — steady-state timing; every per-run time is emitted under
+    // "runs", so a host stall shows as one outlier among steady runs
     // instead of masquerading as a slow operator.
     val only = args.toSet
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
     val keys = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }.toSeq
-    // PASS-INTERLEAVED repeats (r16): the repeats run as `repeat` whole-
-    // suite PASSES (pass 1 = every key once, then pass 2, ...), not as N
-    // back-to-back runs per key. Same work, same min-of-N semantics — but
-    // the host VM's documented 30–60 s stalls freeze the process wholesale,
-    // and with consecutive repeats one stall spans ALL N runs of the keys
-    // it lands on, so even the min is inflated (the driver's r15 session
-    // recorded c18 at 6.0 s min-of-3 vs its 0.21 s record — every repeat
-    // sat inside one freeze). Interleaved, each key's N runs are minutes
-    // apart, so a stall can inflate at most one of them and min-of-N
-    // filters it as designed. Warm-cache semantics are unchanged: fixtures
-    // and shared frames warm on pass 1 exactly as they warmed on run 1.
-    val (calStPre, calMtPre, calMemStPre, calMemMtPre) = calibrate()
-    val (calCpuPre, calSchedPre) = sparkCalibrate(spark)
-    // SHARED-RUN ACCOUNTING (r19, r18 ADVICE medium): the tumbling-Append
-    // streaming run + its finalized-rows parquet materialization is real
-    // pipeline work consumed by i9/i10/i12/i14, but session-memoized it
-    // lands in no key's min-of-N minimum (only pass-1 first-consumer runs
-    // paid it, which the min filters). Time it COLD here as its own
-    // record entry, so the suite total accounts the shared aggregation
-    // exactly once and each consumer key times only its distinct claim
-    // warm — the production fan-out's true cost split. Skipped when a key
-    // subset is requested (local iteration keeps first-consumer-pays
-    // semantics there).
-    // r21 adds `_shared_retrieval_prime` under the same convention: the
-    // bm25 score frame + fused ranking became sharedFrames this round
-    // (consumed by l26/l51/l52), and their one-time build must appear in
-    // the suite total exactly once instead of in no key's min-of-N.
+    // PASS-INTERLEAVED repeats: the repeats run as `repeat` whole-suite
+    // PASSES (pass 1 = every key once, then pass 2, ...), not as N
+    // back-to-back runs per key. A host stall freezes the process
+    // wholesale; with consecutive repeats one stall can span all N runs
+    // of the keys it lands on and inflate even the minimum. Interleaved,
+    // each key's N runs are minutes apart, so a stall inflates at most
+    // one of them and min-of-N filters it. Fixtures and shared frames
+    // warm on pass 1 exactly as they would on a key's first run.
+    //
+    // SHARED-RUN PRIMES: a session-memoized frame consumed by several
+    // keys (the tumbling-Append stream of i9/i10/i12/i14; the bm25 and
+    // fused-ranking frames of l26/l51/l52) is built by whichever consumer
+    // runs first, so its one-time build would land in no key's min-of-N.
+    // Each is timed COLD here as its own record entry, so the suite total
+    // counts the shared build exactly once and each consumer times only
+    // its own work. Skipped for a key subset (first consumer pays there).
     def primeOne(name: String, run: () => Unit): (String, Vector[Double], Int) = {
       val t0 = System.nanoTime()
       try {
@@ -233,52 +87,30 @@ object Bench {
     val errs = results.collect { case (k, _, f) if f > 0 => s"\"" + k + "\":" + f }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, _) if v.nonEmpty => v.min }.sum
-    val (calStPost, calMtPost, calMemStPost, calMemMtPost) = calibrate()
-    val (calCpuPost, calSchedPost) = sparkCalibrate(spark)
-    // Locale.ROOT throughout the JSON (r18 ADVICE): the f-interpolator is
-    // default-locale-sensitive — a comma-decimal locale would emit invalid
-    // JSON and break every downstream fold/report script
-    val calib = Seq(
-      "st_pre" -> calStPre, "mt_pre" -> calMtPre,
-      "st_post" -> calStPost, "mt_post" -> calMtPost,
-      "mem_st_pre" -> calMemStPre, "mem_mt_pre" -> calMemMtPre,
-      "mem_st_post" -> calMemStPost, "mem_mt_post" -> calMemMtPost,
-      "spark_cpu_pre" -> calCpuPre, "spark_sched_pre" -> calSchedPre,
-      "spark_cpu_post" -> calCpuPost, "spark_sched_post" -> calSchedPost)
-      .map { case (k, v) => s"\"$k\":${f3(v)}" }
-      .mkString("{", ",", s""","iters":$CalibIters}""")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"errors":$errs,"calib":$calib,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runs,"errors":$errs,"sf":"$sfDir"}"""
     println(json)
-    // persist the full JSON: the driver's log tail truncates at 2000
-    // chars, which has repeatedly cut off the suite total. The durable
-    // record is a committed bench_r{N}_full.json per round (gitignore
-    // admits that pattern; the builder runs the suite at sf0.1 and
-    // commits the copy — r8 onward)
+    // persist the full JSON (per-run times included): a log tail that
+    // truncates long lines would otherwise lose it
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-    // LAST stdout line is the compact record (suite total, per-key count,
-    // error map, 10 slowest, full-record path) PLUS, since r22, the full
-    // per-query min-of-N map (VERDICT r21 task 2: the driver's r20
-    // capture kept only this last line, so PERF_r21 had no per-query
-    // history to diff — n_common was 0 and the geomean null; the last
-    // line must be self-contained for the round-over-round diff). The
-    // ~9 KB queries map still truncates inside a 2000-char LOG tail, but
-    // the tail is display-only — the driver parses the whole line.
-    // Combined with build.sbt's showSuccess := false this line is the
-    // final line of the sbt run.
+    // LAST stdout line is the compact, self-contained record: suite total,
+    // per-key count, the full per-query min-of-N map, error map, 10
+    // slowest and the full-record path, so a reader that keeps only the
+    // last line can still diff per query. Combined with build.sbt's
+    // showSuccess := false this line is the final line of the sbt run.
     val slowest = results.collect { case (k, v, _) if v.nonEmpty => (k, v.min) }
       .sortBy(-_._2).take(10)
       .map { case (k, s) => s"\"" + k + "\":" + f3(s) }.mkString("{", ",", "}")
     val nOk = results.count(_._2.nonEmpty)
     // errors CAPPED at 10 keys (+ a count of the rest) in the compact line:
-    // a mass failure is exactly when the 2000-char tail matters most, and
-    // the full map would truncate the line mid-JSON again (full map is in
-    // the queries_file record above)
+    // a mass failure is exactly when a truncated tail matters most, and
+    // the full map would cut the line mid-JSON (the full map is in the
+    // queries_file record above)
     val errPairs = results.collect { case (k, _, f) if f > 0 => (k, f) }
     val errsCompact = (errPairs.take(10).map { case (k, f) => s"\"" + k + s"\":$f" } ++
       (if (errPairs.size > 10) Seq(s"\"_more_failed_keys\":${errPairs.size - 10}") else Nil))
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nOk,"queries":$qs,"errors":$errsCompact,"calib":$calib,"slowest":$slowest,"queries_file":"$out","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nOk,"queries":$qs,"errors":$errsCompact,"slowest":$slowest,"queries_file":"$out","sf":"$sfDir"}""")
     spark.stop()
   }
 }

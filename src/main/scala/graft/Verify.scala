@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -8,22 +7,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only = rest.toSet // optional extra args: run only these query keys
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); pin the legacy long-read
-      // once at build time so every query/path sees the same session state.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle/spill on tmpfs (see Bench.scala)
-      .config("spark.local.dir", "/dev/shm/graft_spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // fail-loud data profile: one footer-read line per table, so the next
-    // silent testdata regeneration shows up here instead of as dozens of
-    // opaque per-query errors (the r12 lesson)
+    val spark = Session.local()
+    // fail-loud data profile: one footer-read line per table, so a silent
+    // testdata regeneration shows up here instead of as dozens of opaque
+    // per-query errors
     Tables.profileData(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     var failed = List.empty[String]
@@ -38,8 +25,8 @@ object Verify {
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in the oracle SQL would otherwise make the reader's
+    // json.load fail and silently drop every correctness check.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

@@ -287,6 +287,33 @@ object Streaming {
         max(col("cnt")).as("max_slot"))
   }
 
+  /** The i15 stream-stream LEFT OUTER join as a pure stream transform:
+    * each click with the same user's purchases in the 30 minutes after
+    * it, under a 1-hour watermark; an unmatched click emits null-extended
+    * once the watermark passes click_ts + 30 min. */
+  def clickPurchaseLeftJoin(events: DataFrame): DataFrame = {
+    val ev = events.withWatermark("ts", "1 hour")
+    val clicks = ev
+      .filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"),
+        col("ts").as("click_ts"))
+    val purchases = ev
+      .filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+        col("ts").as("purchase_ts"))
+    clicks.join(purchases,
+      col("user_id") === col("p_user") &&
+        col("purchase_ts") >= col("click_ts") &&
+        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
+      "left_outer")
+  }
+
+  /** The i16 event_id dedup within a 1-hour watermark, as a pure stream
+    * transform. */
+  def dedupWithinWatermark(events: DataFrame): DataFrame =
+    events.withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("event_id")
+
   val queries: Map[String, Q] = Map(
     // i1: 1-hour tumbling windows per event_type
     "i1_stream_tumbling" -> ((s, d) => {
@@ -454,21 +481,7 @@ object Streaming {
     // DuckDB NULLS LAST — the coalesce removes the engine disagreement
     // instead of papering over it per engine.
     "i15_stream_stream_left_join" -> ((s, d) => {
-      val ev = eventsStream(s, d).withWatermark("ts", "1 hour")
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("click_ts"))
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("purchase_ts"))
-      val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
-        "left_outer")
-      runToTable(s, joined, "append")
+      runToTable(s, clickPurchaseLeftJoin(eventsStream(s, d)), "append")
         .select(col("click_id"), col("purchase_id"), col("user_id"),
           epochUs(col("click_ts")).as("click_ts_us"),
           epochUs(col("purchase_ts")).as("purchase_ts_us"))
@@ -492,9 +505,7 @@ object Streaming {
     // the corpus's event_ids are unique, so append emits every row and
     // the oracle is the same full-table SELECT as i4's.
     "i16_stream_dedup_within_wm" -> ((s, d) => {
-      val deduped = eventsStream(s, d)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
+      val deduped = dedupWithinWatermark(eventsStream(s, d))
         .select(col("event_id"), col("user_id"), col("event_type"),
           epochUs(col("ts")).as("ts_us"), col("value"))
       runToTable(s, deduped, "append")
@@ -656,7 +667,7 @@ object Streaming {
     // on the RocksDB provider — each window's histogram is emitted once
     // when the watermark passes its end and its state is evicted in the
     // same commit, so state stays bounded by the watermark horizon on an
-    // unbounded stream (the ScaleSmoke time-axis probe covers this key).
+    // unbounded stream (StreamingSpec's bounded-state case pins this stage).
     // Drift scoring is a STATELESS enrichment over the finalized rows —
     // per type, pd·ln(pd/pc) against a broadcast global baseline from
     // the static table, quantized to integer MICRO-NATS (l25's trick) so

@@ -153,8 +153,10 @@ object TrainOps {
     * VERDICT task). Computed by the codegen'd [[graft.functions.Md5Low64]]
     * (digest-bytes → long, no hex-string round-trip — ~6.5× the SQL
     * chain, measured at its Scaladoc), so the oracle-motivated family
-    * switch costs ~nothing in the scan. */
-  private[graft] def simhashed(s: SparkSession, d: String): DataFrame =
+    * switch costs ~nothing in the scan. Public, so a shell session can
+    * explain this signature subtree, which l1's own plan hides behind a
+    * checkpoint scan. */
+  def simhashed(s: SparkSession, d: String): DataFrame =
     simhashVotes(LlmOps.tokens(s, d).select(col("doc_id"),
       graft.functions.Md5Low64.md5Low64(col("term")).as("h")))
 
@@ -542,11 +544,11 @@ object TrainOps {
   private def bm25ScoreU(s: SparkSession, d: String): DataFrame =
     sharedFrame(s, d, "bm25u")(bm25ScoreURaw(s, d))
 
-  // (r22 negative A/B, kept form: a variant checkpointing the (doc_id,
-  // term, tf) AGGREGATE instead of this raw token stream — smaller
-  // checkpoint, no df-distinct Exchange — was measured SLOWER both at
-  // sf0.1 (0.787 vs 0.655 s min-of-6 same-interval twin keys) and on one
-  // 32× ScaleSmoke clone (7.77 vs 5.60 s, same run): the extra
+  // (negative A/B, kept form: a variant checkpointing the (doc_id, term,
+  // tf) AGGREGATE instead of this raw token stream — smaller checkpoint,
+  // no df-distinct Exchange — was measured SLOWER both at sf0.1 (0.787 vs
+  // 0.655 s min-of-6 same-interval twin keys) and on a 32× near-duplicate
+  // clone of the corpus (7.77 vs 5.60 s, same run): the extra
   // string-keyed hash aggregation over the full token stream costs more
   // than four scans of the cached checkpoint save, at every measured
   // scale. Twins removed after the measurement; see OPTIMIZATION_r22.md.)
@@ -622,14 +624,6 @@ object TrainOps {
   private[graft] def primeSharedRetrieval(s: SparkSession, d: String): Unit = {
     hybridFused(s, d).queryExecution.toRdd.count(); ()
   }
-
-  /** ScaleSmoke hook (r22, VERDICT r21 task 6): the shared retrieval
-    * frames' FOOTPRINT observables — (bm25 score-frame rows, fused
-    * ranking rows). The bm25 checkpoint must stay per-HIT-doc-sized
-    * (docs containing a query term — a corpus fraction, linear in the
-    * clone factor) and the fused frame k-sized (10) at every factor. */
-  private[graft] def retrievalFootprint(s: SparkSession, d: String): (Long, Long) =
-    (bm25ScoreU(s, d).count(), hybridFused(s, d).count())
 
   private def qualityFeatures(s: SparkSession, d: String): DataFrame =
     sharedFrame(s, d, "qfeat")(qualityFeaturesRaw(s, d))
@@ -1163,8 +1157,8 @@ object TrainOps {
     // impossible, and recall is 1.0 on this corpus — max pairwise cosine
     // 0.51, so every vector is its own cluster, the honest output);
     // TrainOpsSpec pins the NON-trivial claims: recall >= 0.9 on planted
-    // clusters, A~B~C chain closure, stranger precision. ScaleSmoke's
-    // cloned embeddings exercise real clusters.
+    // clusters, A~B~C chain closure, stranger precision. The benchmark's
+    // corpus_scaled clones (perfbench/corpus.py) exercise real clusters.
     "l12_dedup_embedding" -> ((s, d) =>
       embeddingNearDups(t(s, d, "embeddings").select("vec_id", "embedding"), 0.98)),
 
@@ -1888,8 +1882,7 @@ object TrainOps {
         .orderBy("doc_id")
     }),
 
-    // l28: PARTITION-PRUNED lake read — the #1 100-TB lever promoted
-    // from the ScaleSmoke layout probe (SPARK_GRAFT_LAYOUT=lang) to a
+    // l28: PARTITION-PRUNED lake read — the #1 100-TB lever as a
     // first-class oracled key: documents laid out PARTITIONED BY lang
     // (the hive-style lake layout a production corpus ships in — one
     // directory per language), and a lang-scoped job whose scan must
@@ -1951,10 +1944,10 @@ object TrainOps {
     // (posexplode → lead/cumsum per doc → group to chunks — the l6/l13
     // shape: one hash-shuffle by doc_id, in-partition sort): a first
     // draft built chunks per-row with an `aggregate` HOF over a
-    // struct(array,string) accumulator, and the ScaleSmoke 8× probe
-    // caught it at 443 s — the interpreted array-accumulator copy per
-    // element is pathologically slow; the window form runs the same
-    // probe in seconds. The aggs/joins shuffle 32-hex hashes and ids,
+    // struct(array,string) accumulator, and an 8× near-duplicate clone
+    // of the corpus caught it at 443 s — the interpreted array-accumulator
+    // copy per element is pathologically slow; the window form runs the
+    // same clone in seconds. The aggs/joins shuffle 32-hex hashes and ids,
     // never text. Linear at any corpus size.
     "l29_dedup_cdc_chunks" -> ((s, d) => {
       val boiler = "subscribe now for weekly updates and exclusive offers " +
@@ -2225,9 +2218,9 @@ object TrainOps {
         // the degraded state must scale WITH the corpus: real tiny-file
         // pathology has constant (tiny) file size, so file count grows
         // with the data — a fixed shard count would be OVERTAKEN by the
-        // ceil(rows/100) compaction target at larger corpora (the 8×
-        // ScaleSmoke probe caught exactly that). ~25 rows per fragment,
-        // capped so the fixture write stays bounded at probe factors.
+        // ceil(rows/100) compaction target at larger corpora (an 8×
+        // clone of the corpus caught exactly that). ~25 rows per
+        // fragment, capped so the fixture write stays bounded.
         val docs = s.read.parquet(s"$d/documents.parquet")
         val nFrag = math.max(16L, math.min(2048L,
           (docs.count() + 24) / 25)).toInt

@@ -62,7 +62,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("lang-partitioned documents layout prunes partitions under a lang filter") {
-    // the §7.5 corpus layout (ScaleSmoke SPARK_GRAFT_LAYOUT=lang): docs
+    // the §7.5 corpus layout (key l28's lake layout): docs
     // partitioned by lang; a lang-scoped pipeline must list only that
     // partition's directory, same contract as the a5 pin above
     val dir = Tables.scratch(spark, sfTiny, "lang_prune_guard")

@@ -499,7 +499,7 @@ class PropertySpec extends AnyFunSuite {
       val dups = base.take(6).zipWithIndex.map { case ((_, t), k) => (100L + k, t) }
       // letters-only tokens (the tokenizer splits on [^a-z]+ — digits
       // would collapse all "unique" tokens to the same stem, the exact
-      // trap ScaleSmoke's cloneTok comment records)
+      // trap perfbench/corpus.py's clone_suffix comment records)
       val uniq = (0 until 4).map { k =>
         (200L + k, (0 until 12).map(j =>
           s"zq${('a' + iter).toChar}${('a' + k).toChar}${('a' + j).toChar}qz")

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -238,6 +239,54 @@ class StreamingSpec extends AnyFunSuite {
       val remaining = st.map(_.numRowsTotal).sum
       assert(remaining <= 1, s"only the live 13:00 window may remain, got $remaining")
     } finally q.stop()
+  }
+
+  test("Append state is bounded by the watermark horizon, not by stream length") {
+    // The same 3-hour event slice is replayed N and then 2N times, slice k
+    // shifted by k·8 h (further apart than any watermark delay), one
+    // micro-batch per slice, so the watermark advances and evicts between
+    // batches as on an unbounded stream. Eviction lags one batch, so the
+    // state after a batch is one slice plus the previous slice's tail:
+    // peak state must not move when the stream doubles.
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val types = Seq("click", "purchase", "view")
+    // 60 events 3 min apart; each user's click, purchase and view sit
+    // 3 min apart (a matched i15 pair), users recur every 45 min
+    val slice = (0 until 60).map(i => (i.toLong, 3L * i, (i / 3 % 5).toLong, types(i % 3)))
+    val t0 = ts("2024-01-01 00:00:00").getTime
+    def run(label: String, stage: DataFrame => DataFrame, slices: Int): (Long, Long) = {
+      val in = MemoryStream[(Long, Timestamp, Long, String)]
+      val q = stage(in.toDF().toDF("event_id", "ts", "user_id", "event_type"))
+        .writeStream.format("memory").queryName(s"bounded_${label}_$slices")
+        .outputMode("append").start()
+      try {
+        for (k <- 0 until slices) {
+          in.addData(slice.map { case (id, min, user, tpe) =>
+            (k * 1000L + id, new Timestamp(t0 + (k * 480L + min) * 60000L), user, tpe)
+          })
+          q.processAllAvailable()
+        }
+        val ops = q.recentProgress.toSeq.map(_.stateOperators)
+        (ops.map(_.map(_.numRowsTotal).sum).max, ops.flatten.map(_.numRowsRemoved).sum)
+      } finally q.stop()
+    }
+    val stages = Seq[(String, DataFrame => DataFrame)](
+      "tumbling" -> operators.Streaming.tumblingAgg, // i9/i12/i14
+      "session" -> operators.Streaming.sessionAgg, // i11
+      "chained" -> operators.Streaming.chainedAgg, // i20
+      "dedup" -> operators.Streaming.dedupWithinWatermark, // i16
+      "left_join" -> operators.Streaming.clickPurchaseLeftJoin) // i15
+    val n = 2
+    for ((label, stage) <- stages) {
+      val (peakN, removedN) = run(label, stage, n)
+      val (peak2N, removed2N) = run(label, stage, 2 * n)
+      assert(removedN > 0 && removed2N > 0,
+        s"$label: the watermark never evicted state ($removedN, $removed2N)")
+      assert(peak2N <= peakN,
+        s"$label: peak state grew with stream length: $peakN rows at $n slices, " +
+          s"$peak2N at ${2 * n}")
+    }
   }
 
   test("i3 session agg runs Append on the RocksDB state store provider") {

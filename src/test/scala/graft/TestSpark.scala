@@ -2,22 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole forked test JVM (same confs as
-  * Verify/Bench: UTC, nanos-as-long for events.parquet, small shuffle). */
+/** One shared session for the whole forked test JVM: `Session.local` at a
+  * fixed 4 cores, so the specs' partition counts do not follow the host. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft_spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
   val sfTiny = "/root/testdata/sf0.001"
 
   /** Fresh per-call scratch dir UNDER the app-keyed tmpfs tree (so the
