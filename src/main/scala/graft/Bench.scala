@@ -35,7 +35,11 @@ object Bench {
     // runs first, so its one-time build would land in no key's min-of-N.
     // Each is timed COLD here as its own record entry, so the suite total
     // counts the shared build exactly once and each consumer times only
-    // its own work. Skipped for a key subset (first consumer pays there).
+    // its own work. The re-laid inputs of Tables.readPath (one cached copy
+    // per under-split table) are primed first the same way, before any
+    // key reads a table; on a machine where an earlier run already built
+    // them for this data signature the entry times only the check.
+    // Skipped for a key subset (first consumer pays there).
     def primeOne(name: String, run: () => Unit): (String, Vector[Double], Int) = {
       val t0 = System.nanoTime()
       try {
@@ -51,6 +55,7 @@ object Bench {
     val primed: Seq[(String, Vector[Double], Int)] =
       if (only.nonEmpty) Nil
       else Seq(
+        primeOne("_relaid_inputs_prime", () => Tables.relayInputs(spark, sfDir)),
         primeOne("_shared_stream_prime",
           () => operators.Streaming.primeSharedTumbling(spark, sfDir)),
         primeOne("_shared_retrieval_prime",

@@ -162,7 +162,7 @@ object Extensions {
       s.sql("""SELECT l_orderkey, l_linenumber,
                  round(graft_disc_price(l_extendedprice, l_discount), 4) AS disc_price
                FROM k8_lineitem
-               ORDER BY l_orderkey, l_linenumber""")
+               ORDER BY l_orderkey, l_linenumber, disc_price""")
     }),
 
     // k9: SQL-LANGUAGE TABLE FUNCTION — the table-valued member of the
@@ -280,7 +280,7 @@ object Extensions {
     "k8_sql_lang_udf" ->
       """SELECT l_orderkey, l_linenumber,
            round(l_extendedprice * (1.0 - l_discount), 4) AS disc_price
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
+         FROM lineitem ORDER BY l_orderkey, l_linenumber, disc_price""",
 
     "k6_udaf_declarative" ->
       """SELECT l_returnflag,

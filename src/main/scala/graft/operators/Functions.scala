@@ -71,7 +71,8 @@ object Functions {
       t(s, d, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity",
           "l_extendedprice", "l_discount")
-        .orderBy("l_orderkey", "l_linenumber")
+        .orderBy("l_orderkey", "l_linenumber", "l_quantity",
+          "l_extendedprice", "l_discount")
         .select(
           col("l_orderkey"), col("l_linenumber"),
           rnd4(abs(col("l_discount") - 0.05)).as("a"),
@@ -298,7 +299,7 @@ object Functions {
       t(s, d, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity",
           "l_extendedprice")
-        .orderBy("l_orderkey", "l_linenumber")
+        .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
         .select(col("l_orderkey"), col("l_linenumber"),
           try_divide(col("l_extendedprice"), col("l_quantity") - 1)
             .as("per_extra_unit"),
@@ -506,7 +507,8 @@ object Functions {
            round(pow(l_quantity, 2), 4) AS p2,
            l_orderkey % 7 AS pm,
            CAST(sign(l_discount - 0.05) AS INTEGER) AS sg
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
+         FROM lineitem ORDER BY l_orderkey, l_linenumber,
+           l_quantity, l_extendedprice, l_discount""",
 
     "h5_conditional" ->
       """SELECT o_orderkey,
@@ -628,7 +630,8 @@ object Functions {
                 THEN epoch_us(make_timestamp(2024, 1,
                        CAST((l_orderkey + l_linenumber) % 32 AS INT), 0, 0, 0))
                 ELSE NULL END AS slot_day_us
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
+         FROM lineitem ORDER BY l_orderkey, l_linenumber,
+           l_quantity, l_extendedprice""",
 
     // DuckDB levenshtein has no threshold arg — the capped leg is the
     // same distance clamped by the identical past-k contract (−1)

@@ -65,7 +65,7 @@ object Relational {
     "a2_scan_projection" -> ((s, d) =>
       t(s, d, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")),
+        .orderBy("l_orderkey", "l_linenumber", "l_quantity")),
 
     "a3_scan_filter_pushdown" -> ((s, d) =>
       t(s, d, "lineitem")
@@ -88,8 +88,10 @@ object Relational {
 
     "a5_sink_partitioned_parquet" -> ((s, d) => {
       val path = cachedFixture(s, d, "a5_part") { p =>
+        // one file per year, however many splits the input scans as
         t(s, d, "orders")
           .withColumn("o_year", year(col("o_orderdate")))
+          .repartition(col("o_year"))
           .write.mode("overwrite").partitionBy("o_year").parquet(p)
       }
       s.read.parquet(path)
@@ -112,6 +114,7 @@ object Relational {
     "a12_sink_dynamic_overwrite" -> ((s, d) => {
       val path = cachedFixture(s, d, "a12_dynover") { p =>
         val base = t(s, d, "orders").withColumn("o_year", year(col("o_orderdate")))
+          .repartition(col("o_year")) // one file per year, as in a5
         base.write.mode("overwrite").partitionBy("o_year").parquet(p)
         base.filter(col("o_year") === 2001)
           .withColumn("o_totalprice", col("o_totalprice") * 2)
@@ -294,8 +297,10 @@ object Relational {
     // still prunes the data columns: metadata fields come from the
     // file listing + row position counters, not the column chunks.
     "a22_source_file_metadata" -> ((s, d) => {
+      // the claim is about the physical source file, so read it directly,
+      // not through Tables.t's re-laid copy
       val physicalLen = new java.io.File(s"$d/orders.parquet").length()
-      t(s, d, "orders")
+      s.read.parquet(s"$d/orders.parquet")
         .select(col("_metadata.file_name").as("fn"),
           col("_metadata.file_size").as("fsz"),
           col("_metadata.row_index").as("ri"))
@@ -1512,7 +1517,7 @@ object Relational {
         dbl(dec(col("l_extendedprice"), 18, 2) *
           (dec(lit(1), 3, 2) - dec(col("l_discount"), 4, 2)) *
           (dec(lit(1), 3, 2) + dec(col("l_tax"), 4, 2))).as("charge")
-      ).orderBy("l_orderkey", "l_linenumber")),
+      ).orderBy("l_orderkey", "l_linenumber", "revenue", "charge")),
 
     "b2_filter_complex" -> ((s, d) =>
       t(s, d, "part").filter(
@@ -1549,7 +1554,8 @@ object Relational {
       t(s, d, "lineitem").createOrReplaceTempView("b4_lineitem")
       s.sql("""SELECT * EXCEPT (l_extendedprice, l_discount, l_tax, l_shipdate)
                FROM b4_lineitem
-               ORDER BY l_orderkey, l_linenumber""")
+               ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey,
+                 l_quantity, l_returnflag, l_linestatus""")
     }),
 
     // ---- C. joins ----
@@ -2307,7 +2313,7 @@ object Relational {
       "SELECT * FROM nation ORDER BY n_nationkey",
 
     "a2_scan_projection" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem ORDER BY l_orderkey, l_linenumber",
+      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem ORDER BY l_orderkey, l_linenumber, l_quantity",
 
     "a3_scan_filter_pushdown" ->
       """SELECT CAST(year(l_shipdate)*100 + month(l_shipdate) AS BIGINT) AS ym, count(*) AS cnt
@@ -2802,7 +2808,7 @@ object Relational {
       """SELECT l_orderkey, l_linenumber,
            CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
            CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))) * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2))) AS DOUBLE) AS charge
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
+         FROM lineitem ORDER BY l_orderkey, l_linenumber, revenue, charge""",
 
     "b2_filter_complex" ->
       """SELECT p_partkey, p_name, p_brand, p_size, p_retailprice FROM part
@@ -2819,7 +2825,8 @@ object Relational {
     // DuckDB's spelling of subtractive projection is EXCLUDE
     "b4_project_star_except" ->
       """SELECT * EXCLUDE (l_extendedprice, l_discount, l_tax, l_shipdate)
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
+         FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey,
+           l_quantity, l_returnflag, l_linestatus""",
 
     "c1_join_broadcast_equi" ->
       """SELECT c_mktsegment, count(*) AS order_cnt
