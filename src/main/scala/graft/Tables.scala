@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /** Table loaders + shared determinism helpers (SURVEY.md §1, §7.2).
   *
   * Conventions enforced across every oracled query:
@@ -42,7 +44,12 @@ object Tables {
     * Deciding costs a `stat`; building reads the row count from the
     * footer and writes the copy in one job. The source read is one task,
     * so `maxRecordsPerFile = ceil(rows / cores)` cuts it into contiguous
-    * runs of the source rows, in order. */
+    * runs of the source rows, in order. The copy keeps the source's rows
+    * per row group: a vectorized batch never spans a row group, so a
+    * copy written as one group per file would read a many-group source
+    * in batches several times larger, and a wide text column's batch
+    * buffer would then outgrow half a G1 region and be allocated as a
+    * humongous object in every scan task. */
   private[graft] def readPath(spark: SparkSession, dir: String, name: String): String = {
     val src = new java.io.File(s"$dir/$name.parquet")
     val cores = spark.sparkContext.defaultParallelism
@@ -52,9 +59,12 @@ object Tables {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(src.toURI), new org.apache.hadoop.conf.Configuration())
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val rows = try reader.getRecordCount finally reader.close()
+      val (rows, groupRows) = try
+        (reader.getRecordCount, reader.getRowGroups.asScala.map(_.getRowCount).maxOption)
+      finally reader.close()
       spark.read.parquet(src.getPath).write.mode("overwrite")
         .option("maxRecordsPerFile", math.max(1L, (rows + cores - 1) / cores))
+        .option("parquet.block.row.count.limit", math.max(1L, groupRows.getOrElse(1L)))
         .parquet(tmp)
     }
   }
@@ -310,8 +320,9 @@ object Tables {
     * layout or contents change.
     */
   // v2: fragmented_lake shard count scales with rows; v3: fixtures written
-  // from a re-laid input have one file per input split
-  val FixtureVersion = 3
+  // from a re-laid input have one file per input split; v4: a re-laid
+  // copy keeps its source's rows per row group
+  val FixtureVersion = 4
   def cachedFixture(spark: SparkSession, d: String, tag: String)
       (build: String => Unit): String = {
     val sig = java.util.UUID.nameUUIDFromBytes(

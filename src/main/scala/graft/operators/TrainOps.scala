@@ -1298,9 +1298,12 @@ object TrainOps {
             col("len_sum").cast(DoubleType) / col("n_tokens") / 8.0))
         .filter(col("q") >= 0.5)
         .select("doc_id")
-      // stage 2: exact dedup survivors (j1's rule)
+      // stage 2: exact dedup survivors (j1's rule). The 32-byte binary
+      // digest groups exactly as its hex string does; a binary key keeps
+      // the partial aggregate off the row-based fast hash map, whose
+      // collision fallback gives each scan task a second 64 MB page
       val docs = t(s, d, "documents")
-      val dedup = docs.groupBy(sha2(col("text"), 256).as("dig"))
+      val dedup = docs.groupBy(unhex(sha2(col("text"), 256)).as("dig"))
         .agg(min(col("doc_id")).as("doc_id"))
         .select("doc_id")
       // stage 3: decontamination (l16's eval set, anti-join)

@@ -20,9 +20,10 @@ class TablesSpec extends AnyFunSuite {
 
   /** Writes `df` as ONE regular parquet file at `$dir/$name.parquet` (the
     * shape of every sf table), through a staging dir outside `dir`. */
-  private def writeOneFile(df: DataFrame, dir: String, name: String): File = {
+  private def writeOneFile(df: DataFrame, dir: String, name: String,
+      options: Map[String, String] = Map.empty): File = {
     val stage = TestSpark.tmpDir("tables_stage")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    df.coalesce(1).write.mode("overwrite").options(options).parquet(stage)
     val part = new File(stage).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
     val out = new File(dir, s"$name.parquet")
@@ -49,6 +50,17 @@ class TablesSpec extends AnyFunSuite {
     fixtureTrees(dir).flatMap(t => Option(t.listFiles()).getOrElse(Array.empty))
       .filter(_.getName.startsWith("split"))
 
+  /** The row count of each row group of a parquet file, in file order. */
+  private def rowGroupRows(f: File): Seq[Long] = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI), new org.apache.hadoop.conf.Configuration()))
+    try {
+      val groups = reader.getRowGroups
+      (0 until groups.size).map(i => groups.get(i).getRowCount)
+    } finally reader.close()
+  }
+
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
@@ -73,6 +85,20 @@ class TablesSpec extends AnyFunSuite {
     assert(parts.size == cores, s"${parts.size} files in the copy")
     assert(parts.flatMap(f => spark.read.parquet(f.getPath).collect()).toSeq ==
       src.collect().toSeq, "the copy does not keep the source's row order")
+  }
+
+  test("the re-laid copy keeps the source's rows per row group") {
+    val d = TestSpark.tmpDir("tables_groups")
+    val f = writeOneFile(spark.range(0L, 200L).toDF("id"), d, "items",
+      Map("parquet.block.row.count.limit" -> "25"))
+    assert(rowGroupRows(f) == Seq.fill(8)(25L), "the source must have 8 row groups of 25 rows")
+    cleaning(d) {
+      val parts = partsInOrder(Tables.readPath(spark, d, "items"))
+      assert(parts.size == cores, s"${parts.size} files in the copy")
+      val groups = parts.map(rowGroupRows)
+      assert(groups.flatten.forall(_ <= 25L), s"row groups larger than the source's: $groups")
+      assert(groups.flatten.sum == 200L)
+    }
   }
 
   test("events re-lays every ts encoding and the loader still canonicalizes it") {
