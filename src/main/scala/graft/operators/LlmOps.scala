@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
 object LlmOps {
 
   /** lower + split on non-letter runs; drops empty tokens. */
-  private[operators] def tokens(s: SparkSession, d: String): DataFrame =
+  private[graft] def tokens(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .select(col("doc_id"), col("lang"),
         explode(split(lower(col("text")), "[^a-z]+")).as("term"))

@@ -710,10 +710,9 @@ object Streaming {
     // expressions — no state store, no watermark, no shuffle; rows emit
     // in their own micro-batch and the plan is a map over the stream.
     // Production LLM ingest is mostly THIS (gate at the edge), with the
-    // stateful monitors (i12) downstream of it. Token stats computed
-    // array-side (size/filter/concat_ws over the split — identical
-    // VALUES to the batch explode path), quality formula and 0.26 keep
-    // line lifted verbatim from l5/l24. Fully oracled: stateless append
+    // stateful monitors (i12) downstream of it. The score is l5's own
+    // per-row [[TrainOps.Quality]] (identical VALUES to the batch explode
+    // path), the 0.26 keep line l24's. Fully oracled: stateless append
     // over AvailableNow emits every row, so the batch l5-style SQL is
     // the exact result.
     "i13_stream_ingest_gate" -> ((s, d) => {
@@ -723,19 +722,11 @@ object Streaming {
         StructField("n_chars", LongType)))
       val stream = s.readStream.schema(docsSchema)
         .option("basePath", d).parquet(s"$d/documents.parquet*")
-      val ws = words(lower(col("text")))
+      val q = TrainOps.Quality(col("ws"))
       val gated = stream
-        .select(col("doc_id"), ws.as("ws"))
-        .select(col("doc_id"),
-          size(col("ws")).cast(LongType).as("n_tokens"),
-          size(filter(col("ws"), x => x === "the" || x === "a" ||
-            x === "of" || x === "and")).cast(LongType).as("stop_cnt"),
-          length(concat_ws("", col("ws"))).cast(LongType).as("len_sum"))
-        .filter(col("n_tokens") >= 1L)
-        .withColumn("raw_q", lit(0.4) * (col("stop_cnt").cast(DoubleType) / col("n_tokens"))
-          + lit(0.3) * least(lit(1.0), col("n_tokens") / 100.0)
-          + lit(0.3) * least(lit(1.0),
-            col("len_sum").cast(DoubleType) / col("n_tokens") / 8.0))
+        .select(col("doc_id"), words(lower(col("text"))).as("ws"))
+        .filter(q.n > 0)
+        .select(col("doc_id"), q.n.cast(LongType).as("n_tokens"), q.score.as("raw_q"))
         .select(col("doc_id"), col("n_tokens"),
           (floor(col("raw_q") * 1e4 + 0.5) / 1e4).as("quality"),
           (col("raw_q") >= 0.26).as("keep"))

@@ -23,8 +23,9 @@ import org.apache.spark.sql.types._
   *    argmax — only for dims that fit a broadcast) from the scale path
   *    (l3, IVF: one pass to assign vectors to coarse centroids, query
   *    probes a few cells — the shuffle is per-cell, not all-pairs);
-  *  - langid/quality/fingerprint (l4/l5/l6) are single-scan explode →
-  *    groupBy(doc_id) pipelines, map-side combinable, one shuffle each;
+  *  - langid/fingerprint (l4/l6) are single-scan explode → groupBy(doc_id)
+  *    pipelines, map-side combinable, one shuffle each; quality (l5) and
+  *    decontamination (l16) score each document in its own row;
   *  - multimodal (l7) treats media as an opaque binary column with a
   *    fixed-layout header and DECODES it with expression-level byte math
   *    (binary substring + hex/conv field reads — codegen'd, no UDF): a
@@ -132,6 +133,40 @@ object TrainOps {
 
   private def idBelow(thresholdHex: String): Column =
     idBelow(col("doc_id"), thresholdHex)
+
+  /** l5's pinned quality formula over a document's words `ws`, computed in
+    * the row: 0.4·stop_ratio + 0.3·min(1, n/100) + 0.3·min(1, avg_len/8),
+    * with n = size(ws), the stop-word count n minus the size of `ws`
+    * without the four stop words, and the summed word length the length
+    * of the words joined. Each term is the same IEEE expression as the
+    * oracle's explode → groupBy form, so both score a document alike.
+    * Pass `ws` as a column reference: each member reads it several times. */
+  private[graft] final case class Quality(ws: Column) {
+    val n: Column = size(ws)
+    val stopRatio: Column =
+      (n - size(Seq("the", "a", "of", "and").foldLeft(ws)(array_remove(_, _))))
+        .cast(DoubleType) / n
+    /** Null for a document without words, whose ratios are undefined. */
+    val score: Column = when(n > 0, lit(0.4) * stopRatio
+      + lit(0.3) * least(lit(1.0), n / 100.0)
+      + lit(0.3) * least(lit(1.0), length(array_join(ws, "")).cast(DoubleType) / n / 8.0))
+  }
+
+  /** `(doc_id, ws)`: each document with its words, the tokenizer rule of
+    * [[LlmOps.shingleRows]]. */
+  private def docWords(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents").select(col("doc_id"), words(lower(col("text"))).as("ws"))
+
+  /** The pinned eval set of l16/l17/l24's decontamination: 4 word-3-grams
+    * that occur in this corpus and 1 that cannot. */
+  private[graft] val evalShingles: Seq[String] = Seq("row column sort",
+    "stream table hash", "window fast query", "data merge group", "held out benchmark")
+
+  /** How many of [[evalShingles]] a document's words `ws` contain, each
+    * counted once; 0 below 3 words. */
+  private[graft] def evalHits(ws: Column): Column =
+    when(size(ws) >= 3, size(array_intersect(wordNgrams(ws, 3), typedLit(evalShingles))))
+      .otherwise(0).cast(LongType)
 
   /** l4's per-language function-word marker lexicon (alphabetical by lang
     * code — the argmax tie-break order). Pairwise DISJOINT string sets, so
@@ -632,19 +667,8 @@ object TrainOps {
     * the broadcast-vocab / no-pairwise shape (see [[verifiedPairsRaw]]). */
   private[graft] def qualityFeaturesRaw(s: SparkSession, d: String): DataFrame = {
       val toks = LlmOps.tokens(s, d).select("doc_id", "term")
-        .localCheckpoint(eager = false) // feeds qual, vocab, lm
-      val qual = toks.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("term").isin("the", "a", "of", "and"), 1)
-            .otherwise(0)).as("stop_cnt"),
-          sum(length(col("term"))).as("len_sum"))
-        .select(col("doc_id"),
-          (lit(0.4) * (col("stop_cnt").cast(DoubleType) / col("n_tokens"))
-            + lit(0.3) * least(lit(1.0), col("n_tokens") / 100.0)
-            + lit(0.3) * least(lit(1.0),
-              col("len_sum").cast(DoubleType) / col("n_tokens") / 8.0)).as("xq"))
-      val ws = words(lower(col("text")))
-      val rep = t(s, d, "documents").select(col("doc_id"), ws.as("ws"))
+        .localCheckpoint(eager = false) // feeds vocab, lm
+      val rep = docWords(s, d)
         .filter(size(col("ws")) >= 3) // trigram feature needs ≥ 3 tokens
         .withColumn("bgs", wordNgrams(col("ws"), 2))
         .withColumn("tgs", wordNgrams(col("ws"), 3))
@@ -664,8 +688,7 @@ object TrainOps {
         .select(col("doc_id"), (floor(
           col("sq").cast(DoubleType) / col("n_toks") / 1e6 * 1e4 + 0.5) / 1e4)
           .as("xent"))
-      t(s, d, "documents").select("doc_id")
-        .join(qual, Seq("doc_id"), "left")
+      docWords(s, d).select(col("doc_id"), Quality(col("ws")).score.as("xq"))
         .join(rep, Seq("doc_id"), "left")
         .join(lm, Seq("doc_id"), "left")
     }
@@ -893,27 +916,17 @@ object TrainOps {
     }),
 
     // l5: document quality scoring — token count, stopword ratio, mean
-    // token length, composited into a pinned formula
+    // token length, composited into a pinned formula ([[Quality]]), per
+    // row in the scan; documents without words have no score
     "l5_text_quality" -> ((s, d) => {
-      val stop = Seq("the", "a", "of", "and")
-      val perDoc = LlmOps.tokens(s, d)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("term").isin(stop: _*), 1).otherwise(0)).as("stop_cnt"),
-          // exact long sum ÷ count, not avg(): double accumulation order
-          // differs across partitions and flips .xxxx5 rounding boundaries
-          sum(length(col("term"))).as("len_sum"))
-      perDoc
-        .withColumn("avg_len", col("len_sum").cast(DoubleType) / col("n_tokens"))
-        .withColumn("stop_ratio", col("stop_cnt").cast(DoubleType) / col("n_tokens"))
+      val q = Quality(col("ws"))
+      docWords(s, d).filter(q.n > 0)
         // floor(x*1e4+0.5)/1e4 instead of round(): the composite lands on
         // .xxxx5 boundaries where Spark (shortest-repr HALF_UP) and DuckDB
         // disagree; this formula is pure IEEE ops, identical on both
-        .withColumn("raw_q", lit(0.4) * col("stop_ratio")
-          + lit(0.3) * least(lit(1.0), col("n_tokens") / 100.0)
-          + lit(0.3) * least(lit(1.0), col("avg_len") / 8.0))
-        .select(col("doc_id"), col("n_tokens"), rnd4(col("stop_ratio")).as("stop_ratio"),
-          (floor(col("raw_q") * 1e4 + 0.5) / 1e4).as("quality"))
+        .select(col("doc_id"), q.n.cast(LongType).as("n_tokens"),
+          rnd4(q.stopRatio).as("stop_ratio"),
+          (floor(q.score * 1e4 + 0.5) / 1e4).as("quality"))
         .orderBy("doc_id")
     }),
 
@@ -1101,24 +1114,15 @@ object TrainOps {
     // LlmOps.connectedComponents) and l5's exact scoring;
     // emits the full per-doc ledger (cluster, quality, survivor, kept)
     // — the auditable artifact, not just the survivor list. Scale: the
-    // quality agg rides the tokenizer's doc_id grouping; the survivor
+    // quality score is computed in each doc's row of a scan; the survivor
     // window partitions by cluster_id over (id, cluster, q) triples —
     // partition size = dup-cluster size, text never shuffles.
     "l50_dedup_survivor_select" -> ((s, d) => {
       val clusters = LlmOps.connectedComponents(
         t(s, d, "documents").select("doc_id"), verifiedPairs(s, d))._1
-      val stop = Seq("the", "a", "of", "and")
-      val q = LlmOps.tokens(s, d)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("term").isin(stop: _*), 1).otherwise(0)).as("stop_cnt"),
-          sum(length(col("term"))).as("len_sum"))
-        .select(col("doc_id"),
-          floor((lit(0.4) * (col("stop_cnt").cast(DoubleType) / col("n_tokens"))
-            + lit(0.3) * least(lit(1.0), col("n_tokens") / 100.0)
-            + lit(0.3) * least(lit(1.0),
-              (col("len_sum").cast(DoubleType) / col("n_tokens")) / 8.0))
-            * 1e4 + 0.5).cast(LongType).as("q1e4"))
+      val quality = Quality(col("ws"))
+      val q = docWords(s, d).filter(quality.n > 0)
+        .select(col("doc_id"), floor(quality.score * 1e4 + 0.5).cast(LongType).as("q1e4"))
       val scored = clusters.join(q, "doc_id")
       val w = Window.partitionBy("cluster_id")
         .orderBy(col("q1e4").desc, col("doc_id"))
@@ -1250,78 +1254,44 @@ object TrainOps {
 
     // l16: benchmark decontamination — flag training docs sharing any
     // word-3-gram with a (pinned) eval set, the standard n-gram-overlap
-    // decontamination step of corpus assembly. The eval set BROADCASTS
-    // (benchmarks are tiny next to the corpus); shingling is in-row
-    // (shared with j2/l9 — one tokenizer to rule them all), the
-    // broadcast hash join filters at scan speed, and only the HIT rows
-    // (rare by construction) reach the per-doc count shuffle.
-    "l16_decontaminate" -> ((s, d) => {
-      import s.implicits._
-      // 4 grams that occur in this corpus + 1 that cannot (pinned fixture)
-      val evalDf = Seq("row column sort", "stream table hash",
-        "window fast query", "data merge group", "held out benchmark")
-        .toDF("shingle")
-      val hits = LlmOps.shingleRows(s, d)
-        .join(broadcast(evalDf), "shingle")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
-      t(s, d, "documents").select("doc_id")
-        .join(hits, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)) > 0L).as("contaminated"))
-        .orderBy("doc_id")
-    }),
+    // decontamination step of corpus assembly. A per-document map stage:
+    // each doc's distinct shingles meet the eval set in the row
+    // ([[evalHits]], the tokenizer j2/l9 share), so nothing shuffles but
+    // the contract sort.
+    "l16_decontaminate" -> ((s, d) =>
+      docWords(s, d).select(col("doc_id"), evalHits(col("ws")).as("n_hits"))
+        .select(col("doc_id"), col("n_hits"), (col("n_hits") > 0L).as("contaminated"))
+        .orderBy("doc_id")),
 
     // l17: the END-TO-END corpus-prep pipeline — the individual stages
     // (quality l5, exact dedup j1, decontamination l16, split l10,
-    // packing l13) COMPOSED as one declarative plan: filter to quality
-    // ≥ 0.5 → keep min-doc_id per sha256(text) → drop eval-set-overlap
-    // docs → keep the md5 train split → pack survivors into 512-token
-    // sequences per source. One Catalyst optimization over the whole
-    // chain: the per-row stages (quality, digest, split) fuse into the
-    // scan projection; only the dedup group-by, the contamination
-    // anti-join, and the packing window shuffle. This is the query a
-    // real user of the engine runs nightly — and it's fully oracled,
-    // because every stage was built deterministic.
+    // packing l13) COMPOSED as one declarative plan: keep min-doc_id per
+    // sha256(text) over ALL docs, and of those the docs with quality
+    // ≥ 0.5, no eval-set overlap and the md5 train split → pack them into
+    // 512-token sequences per source. One documents scan: the per-doc
+    // stages (quality, contamination, split, token count, digest) run in
+    // its projection and fold into one keep flag, so text and tokens never
+    // cross a shuffle; the digest window and the survivors' range exchange
+    // by source are the only exchanges. Fully oracled, because every stage
+    // was built deterministic.
     "l17_pipeline_corpus_prep" -> ((s, d) => {
-      import s.implicits._
-      // stage 1: quality score (l5's pinned formula, inline)
-      val toks = LlmOps.tokens(s, d)
-      val stop = Seq("the", "a", "of", "and")
-      val quality = toks.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("term").isin(stop: _*), 1).otherwise(0)).as("stop_cnt"),
-          sum(length(col("term"))).as("len_sum"))
-        .withColumn("q", lit(0.4) * (col("stop_cnt").cast(DoubleType) / col("n_tokens"))
-          + lit(0.3) * least(lit(1.0), col("n_tokens") / 100.0)
-          + lit(0.3) * least(lit(1.0),
-            col("len_sum").cast(DoubleType) / col("n_tokens") / 8.0))
-        .filter(col("q") >= 0.5)
-        .select("doc_id")
-      // stage 2: exact dedup survivors (j1's rule). The 32-byte binary
-      // digest groups exactly as its hex string does; a binary key keeps
-      // the partial aggregate off the row-based fast hash map, whose
-      // collision fallback gives each scan task a second 64 MB page
+      // the 32-byte binary digest groups exactly as its hex string does,
+      // in half the bytes per exchanged row
       val docs = t(s, d, "documents")
-      val dedup = docs.groupBy(unhex(sha2(col("text"), 256)).as("dig"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select("doc_id")
-      // stage 3: decontamination (l16's eval set, anti-join)
-      val evalDf = Seq("row column sort", "stream table hash",
-        "window fast query", "data merge group", "held out benchmark")
-        .toDF("shingle")
-      val dirty = LlmOps.shingleRows(s, d)
-        .join(broadcast(evalDf), "shingle")
-        .select("doc_id").distinct()
-      // stage 4: train split (l10's md5 rule) + stage 5: packing (l13)
-      val survivors = docs
-        .join(quality, "doc_id")
-        .join(dedup, "doc_id")
-        .join(dirty, Seq("doc_id"), "left_anti")
-        .filter(idBelow("cd"))
-        .select(col("source"), col("doc_id"),
+        .select(col("doc_id"), col("source"),
+          unhex(sha2(col("text"), 256)).as("dig"),
           size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
-            .cast(LongType).as("n_tokens"))
+            .cast(LongType).as("n_tokens"),
+          words(lower(col("text"))).as("ws"))
+        .select(col("doc_id"), col("source"), col("dig"), col("n_tokens"),
+          (Quality(col("ws")).score >= 0.5 && evalHits(col("ws")) === 0L &&
+            idBelow("cd")).as("keep"))
+      // one range exchange by source serves both the packing window's
+      // clustering and the contract sort's order
+      val survivors = docs
+        .withColumn("first_id", min(col("doc_id")).over(Window.partitionBy("dig")))
+        .filter(col("doc_id") === col("first_id") && col("keep"))
+        .repartitionByRange(col("source"))
       val w = Window.partitionBy("source").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
       survivors
@@ -1689,25 +1659,18 @@ object TrainOps {
     // map-side-combinable global agg, and the 6-row stack is driver-side
     // array math: linear at any corpus size.
     "l24_filter_funnel" -> ((s, d) => {
-      import s.implicits._
-      val docs = t(s, d, "documents")
-      val uniq = docs.select(col("doc_id"), sha2(col("text"), 256).as("dig"))
+      val uniq = t(s, d, "documents")
+        .select(col("doc_id"), sha2(col("text"), 256).as("dig"),
+          words(lower(col("text"))).as("ws"))
+        .select(col("doc_id"), col("dig"), (evalHits(col("ws")) > 0L).as("dirty"))
         .withColumn("m", min(col("doc_id")).over(Window.partitionBy("dig")))
-        .select(col("doc_id"), (col("doc_id") === col("m")).as("uniq"))
-      val evalDf = Seq("row column sort", "stream table hash",
-        "window fast query", "data merge group", "held out benchmark")
-        .toDF("shingle")
-      val dirty = LlmOps.shingleRows(s, d)
-        .join(broadcast(evalDf), "shingle")
-        .select("doc_id").distinct()
-        .withColumn("dirty", lit(true))
+        .select(col("doc_id"), (col("doc_id") === col("m")).as("uniq"), col("dirty"))
       // features come from the SHARED qualityFeatures frame (already
       // LEFT-joined onto the full doc list; token-less docs carry nulls,
       // which every coalesce-gate below drops) — the same frame l27
       // classifies, materialized once per session
       val flags = qualityFeatures(s, d)
         .join(uniq, Seq("doc_id"), "left")
-        .join(dirty, Seq("doc_id"), "left")
         .select( // token-less docs: null features → every coalesce drops them
           coalesce(col("xq") >= 0.26, lit(false)).as("q"),
           coalesce(col("xbi") <= 0.08 && col("xtri") <= 0.05, lit(false)).as("rep"),
@@ -2361,18 +2324,10 @@ object TrainOps {
     // Equivalent to the global greedy because bucket id is monotone in
     // q_u, so bucket-desc-then-(q_u desc, doc_id) IS the global order.
     "l38_budget_select" -> ((s, d) => {
-      val feat = LlmOps.tokens(s, d).select("doc_id", "term")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("term").isin("the", "a", "of", "and"), 1)
-            .otherwise(0)).as("stop_cnt"),
-          sum(length(col("term"))).as("len_sum"))
-        .select(col("doc_id"), col("n_tokens"),
-          floor((lit(0.4) * (col("stop_cnt").cast(DoubleType) / col("n_tokens"))
-            + lit(0.3) * least(lit(1.0), col("n_tokens") / 100.0)
-            + lit(0.3) * least(lit(1.0),
-              col("len_sum").cast(DoubleType) / col("n_tokens") / 8.0))
-            * 1e6 + 0.5).cast(LongType).as("q_u"))
+      val q = Quality(col("ws"))
+      val feat = docWords(s, d).filter(q.n > 0)
+        .select(col("doc_id"), q.n.cast(LongType).as("n_tokens"),
+          floor(q.score * 1e6 + 0.5).cast(LongType).as("q_u"))
       val budget = feat.agg(
         floor(sum(col("n_tokens")) / 2).cast(LongType).as("budget"))
       val bucketed = feat.withColumn("bkt", expr("q_u div 10000"))

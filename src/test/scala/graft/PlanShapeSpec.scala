@@ -268,23 +268,29 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(native == composed)
   }
 
-  test("l17: the composed corpus-prep plan shuffles exactly 5 times, stages fused") {
-    // The end-to-end pipeline's scale contract (SURVEY §7.5): one Catalyst
-    // optimization over the whole 5-stage chain, with per-row stages fused
-    // into scans and exactly these shuffle Exchanges —
-    //   1. quality groupBy(doc_id)        (data-sized: token stream)
-    //   2. exact-dedup groupBy(sha256)    (data-sized: one digest row/doc)
-    //   3. contamination distinct(doc_id) (eval-HIT rows only — rare)
-    //   4. packing window partitionBy(source) (data-sized: survivors)
-    //   5. the contract's final total sort
-    // A 6th Exchange means a stage stopped fusing (e.g. a lost broadcast
-    // or an extra repartition) — the regression this pin exists to catch.
+  test("l17: one documents scan, per-doc stages in its projection, 2 exchanges") {
+    // The end-to-end pipeline's scale contract (SURVEY §7.5): quality,
+    // contamination, split, token count and digest are per-document map
+    // stages in the projection of ONE documents scan, so text and tokens
+    // never cross a shuffle. The only shuffle Exchanges are
+    //   1. the exact-dedup window partitionBy(dig) (one narrow row per doc)
+    //   2. the survivors' range exchange by source, which clusters the
+    //      packing window and orders the contract's final sort at once
+    // A Generate (explode), a second scan or a 3rd Exchange means a stage
+    // went back to a token or shingle stream shuffled to its document, or
+    // the packing and the sort stopped sharing their exchange.
     val p = plan("l17_pipeline_corpus_prep")
     // exclude ReusedExchange too (r9 ADVICE): a reused shuffle is the
-    // OPPOSITE of a new one — counting it would trip the ==5 pin on a
-    // plan that introduced zero additional shuffles
-    val shuffles = "(?<!Broadcast)(?<!Reused)Exchange".r.findAllIn(p).length
-    assert(shuffles == 5, s"expected 5 shuffle Exchanges, found $shuffles:\n$p")
+    // OPPOSITE of a new one
+    val shuffles = p.linesIterator
+      .filter(l => "(?<!Broadcast)(?<!Reused)Exchange ".r.findFirstIn(l).isDefined).toSeq
+    assert(shuffles.size == 2 &&
+      Seq("hashpartitioning(dig#", "rangepartitioning(source#").forall(k => shuffles.exists(_.contains(k))),
+      s"expected the digest and the survivors' range exchanges only:\n$p")
+    assert(!p.contains("Generate"), s"corpus-prep explodes a token stream:\n$p")
+    val scans = p.linesIterator.filter(_.contains("FileScan")).toSeq
+    assert(scans.size == 1 && scans.head.contains("documents"),
+      s"expected one documents scan:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"corpus-prep degenerated to an all-pairs join:\n$p")
   }
@@ -726,7 +732,8 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
     val frames = Seq(
       "shingleRows" -> graft.operators.LlmOps.shingleRows(spark, sfTiny)) ++
-      Seq("l14_repetition_filter", "l17_pipeline_corpus_prep", "l46_dup_span_fraction")
+      Seq("l5_text_quality", "l14_repetition_filter", "l16_decontaminate",
+        "l17_pipeline_corpus_prep", "l46_dup_span_fraction")
         .map(k => k -> SparkEntry.queries(k)(spark, sfTiny))
     frames.foreach { case (name, df) =>
       val hofs = df.queryExecution.analyzed.collectWithSubqueries { case p => p }

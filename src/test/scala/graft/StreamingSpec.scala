@@ -371,35 +371,37 @@ class StreamingSpec extends AnyFunSuite {
     // an in-place regeneration (the r12 µs/ns hazard) starts a FRESH run
     // instead of serving the stale table (the r16 ADVICE fix)
     val dir = graft.Tables.scratch(spark, sfTiny, "i9_memo_spec")
-    new java.io.File(dir).mkdirs()
-    val src = java.nio.file.Paths.get(s"$sfTiny/events.parquet")
-    val dst = java.nio.file.Paths.get(s"$dir/events.parquet")
-    java.nio.file.Files.copy(src, dst,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    def memTable(key: String): String = {
-      val plan = SparkEntry.queries(key)(spark, dir)
-        .queryExecution.analyzed.toString
-      "graft_stream_\\d+".r.findFirstIn(plan).getOrElse(
-        fail(s"$key: no memory-sink table in the analyzed plan:\n$plan"))
+    cleaning(dir) {
+      new java.io.File(dir).mkdirs()
+      val src = java.nio.file.Paths.get(s"$sfTiny/events.parquet")
+      val dst = java.nio.file.Paths.get(s"$dir/events.parquet")
+      java.nio.file.Files.copy(src, dst,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      def memTable(key: String): String = {
+        val plan = SparkEntry.queries(key)(spark, dir)
+          .queryExecution.analyzed.toString
+        "graft_stream_\\d+".r.findFirstIn(plan).getOrElse(
+          fail(s"$key: no memory-sink table in the analyzed plan:\n$plan"))
+      }
+      val n9 = memTable("i9_stream_tumbling_append")
+      val n12 = memTable("i12_stream_drift")
+      assert(n9 == n12,
+        s"i9 ($n9) and i12 ($n12) must consume the same shared streaming run")
+      // simulate an in-place regeneration: same bytes, different mtime ⇒
+      // different file signature ⇒ the memo must NOT serve the old table
+      assert(dst.toFile.setLastModified(dst.toFile.lastModified + 10000L))
+      val n9b = memTable("i9_stream_tumbling_append")
+      assert(n9b != n9,
+        "the shared-run memo served a stale table after the events file changed")
+      // r19 eviction cleanup (r18 ADVICE): the superseded run's checkpoint
+      // scratch dir must be DELETED (tmpfs is RAM) and its memory-sink temp
+      // view dropped, not left to accumulate within the session
+      val oldCkpt = new java.io.File(Tables.scratch(spark, n9, "ckpt"))
+      assert(!oldCkpt.exists(),
+        s"superseded shared-run checkpoint dir leaked: $oldCkpt")
+      assert(!spark.catalog.tableExists(n9),
+        s"superseded memory-sink table leaked: $n9")
     }
-    val n9 = memTable("i9_stream_tumbling_append")
-    val n12 = memTable("i12_stream_drift")
-    assert(n9 == n12,
-      s"i9 ($n9) and i12 ($n12) must consume the same shared streaming run")
-    // simulate an in-place regeneration: same bytes, different mtime ⇒
-    // different file signature ⇒ the memo must NOT serve the old table
-    assert(dst.toFile.setLastModified(dst.toFile.lastModified + 10000L))
-    val n9b = memTable("i9_stream_tumbling_append")
-    assert(n9b != n9,
-      "the shared-run memo served a stale table after the events file changed")
-    // r19 eviction cleanup (r18 ADVICE): the superseded run's checkpoint
-    // scratch dir must be DELETED (tmpfs is RAM) and its memory-sink temp
-    // view dropped, not left to accumulate within the session
-    val oldCkpt = new java.io.File(Tables.scratch(spark, n9, "ckpt"))
-    assert(!oldCkpt.exists(),
-      s"superseded shared-run checkpoint dir leaked: $oldCkpt")
-    assert(!spark.catalog.tableExists(n9),
-      s"superseded memory-sink table leaked: $n9")
   }
 
   test("i17 transformWithState: state continues across batches on RocksDB") {

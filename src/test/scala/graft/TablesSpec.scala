@@ -14,6 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.sql.files.maxPartitionBytes` reads its source unchanged; and an
   * in-place regeneration of the source invalidates the copy. */
 class TablesSpec extends AnyFunSuite {
+  import TestSpark.{cleaning, fixtureTrees}
   private val spark = TestSpark.spark
   import spark.implicits._
   private val cores = spark.sparkContext.defaultParallelism
@@ -32,19 +33,6 @@ class TablesSpec extends AnyFunSuite {
     Tables.deleteRec(new File(stage))
     out
   }
-
-  /** The fixcache trees [[Tables.cachedFixture]] built from `dir`. */
-  private def fixtureTrees(dir: String): Seq[File] = {
-    val ph = Integer.toHexString(dir.hashCode)
-    Option(new File("/dev/shm/graft_tmp").listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("fixcache_") && f.getName.contains(s"_${ph}_"))
-      .toSeq
-  }
-
-  /** Runs `body`, then removes the fixture trees built from `dir`: a spec
-    * dir is app-keyed, so no later signature check would ever evict them. */
-  private def cleaning[T](dirs: String*)(body: => T): T =
-    try body finally dirs.foreach(d => fixtureTrees(d).foreach(Tables.deleteRec))
 
   private def splitCopies(dir: String): Seq[File] =
     fixtureTrees(dir).flatMap(t => Option(t.listFiles()).getOrElse(Array.empty))

@@ -20,4 +20,18 @@ object TestSpark {
     d.mkdirs()
     d.getPath
   }
+
+  /** The fixcache trees [[Tables.cachedFixture]] built from `dir`. */
+  def fixtureTrees(dir: String): Seq[java.io.File] = {
+    val ph = Integer.toHexString(dir.hashCode)
+    Option(new java.io.File("/dev/shm/graft_tmp").listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("fixcache_") && f.getName.contains(s"_${ph}_"))
+      .toSeq
+  }
+
+  /** Runs `body`, then removes the fixture trees built from `dirs` — the
+    * re-laid input copies a read through [[Tables.t]] makes. A spec dir is
+    * app-keyed, so no later signature check would ever evict them. */
+  def cleaning[T](dirs: String*)(body: => T): T =
+    try body finally dirs.foreach(d => fixtureTrees(d).foreach(Tables.deleteRec))
 }

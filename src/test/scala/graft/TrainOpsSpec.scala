@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -767,6 +769,97 @@ class TrainOpsSpec extends AnyFunSuite {
         t -> merges.foldLeft(start) { case (syms, (l, r)) => refApply(syms, l, r) }
       }.toMap
       assert(got == want, s"iter=$iter merges=$merges")
+    }
+  }
+
+  // The explode → groupBy forms l5, l16 and l17 were built on before their
+  // per-document stages moved into the row: the token stream (and the
+  // shingle stream) reduced back to the document by a shuffle.
+  private def perDocRef(d: String): DataFrame =
+    operators.LlmOps.tokens(spark, d).groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tokens"),
+        sum(when(col("term").isin("the", "a", "of", "and"), 1).otherwise(0)).as("stop_cnt"),
+        sum(length(col("term"))).as("len_sum"))
+  private val rawQualityRef = lit(0.4) * (col("stop_cnt").cast("double") / col("n_tokens")) +
+    lit(0.3) * least(lit(1.0), col("n_tokens") / 100.0) +
+    lit(0.3) * least(lit(1.0), col("len_sum").cast("double") / col("n_tokens") / 8.0)
+  private def evalHitsRef(d: String): DataFrame = {
+    val s = spark
+    import s.implicits._
+    operators.LlmOps.shingleRows(s, d)
+      .join(broadcast(operators.TrainOps.evalShingles.toDF("shingle")), "shingle")
+      .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
+  }
+  private def l5Ref(d: String): DataFrame = perDocRef(d)
+    .select(col("doc_id"), col("n_tokens"),
+      round(col("stop_cnt").cast("double") / col("n_tokens"), 4).as("stop_ratio"),
+      (floor(rawQualityRef * 1e4 + 0.5) / 1e4).as("quality"))
+    .orderBy("doc_id")
+  private def l16Ref(d: String): DataFrame =
+    Tables.t(spark, d, "documents").select("doc_id")
+      .join(evalHitsRef(d), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"),
+        (coalesce(col("n_hits"), lit(0L)) > 0L).as("contaminated"))
+      .orderBy("doc_id")
+  private def l17Ref(d: String): DataFrame = {
+    val docs = Tables.t(spark, d, "documents")
+    val quality = perDocRef(d).filter(rawQualityRef >= 0.5).select("doc_id")
+    val dedup = docs.groupBy(sha2(col("text"), 256)).agg(min(col("doc_id")).as("doc_id"))
+    val w = Window.partitionBy("source").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    docs.join(quality, "doc_id").join(dedup, "doc_id")
+      .join(evalHitsRef(d), Seq("doc_id"), "left_anti")
+      .filter(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 2) < "cd")
+      .select(col("source"), col("doc_id"),
+        size(regexp_extract_all(col("text"), lit("\\S+"), lit(0))).cast("long").as("n_tokens"))
+      .withColumn("start_off", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+      .withColumn("seq_id", expr("start_off div 512"))
+      .orderBy("source", "doc_id")
+  }
+
+  test("l5/l16/l17: the in-row stages equal the explode → groupBy form on an adversarial corpus") {
+    // Edge cases of the tokenizer and of each stage: no words at all (empty,
+    // punctuation only, null), 1–2 words (no 3-gram), stop words only,
+    // upper case, non-ASCII letters (delimiters to `words`), an eval
+    // shingle split by punctuation, an eval shingle repeated (counted
+    // once), and duplicate texts under different ids. Dedup runs over ALL
+    // docs before any filter: doc 3 is the min id of its text but falls
+    // outside the md5 split (md5("3") = ec…), so neither it nor its
+    // duplicate 4 (a8…, inside) survives — a filter moved ahead of dedup
+    // would keep 4.
+    val s = spark
+    import s.implicits._
+    val long = Seq.fill(60)("the extraordinary").mkString(" ") // quality 0.8
+    val dup = s"$long of information"
+    val dirty = s"$long row, column; sort"
+    val fixture = Seq(
+      (1L, long, "web"),
+      (2L, "stream table hash stream table hash window fast query", "web"),
+      (3L, dup, "web"), (4L, dup, "books"),
+      (6L, dirty, "books"), (17L, dirty, "web"),
+      (7L, "", "web"), (8L, "!!! ... ,,, ???", "web"), (18L, null, "web"),
+      (9L, "hello", "books"), (11L, "the a", "web"),
+      (12L, "the the the a a of and the", "books"),
+      (13L, long.toUpperCase, "books"),
+      (14L, Seq.fill(30)("thé straße ıstanbul naïve café").mkString(" ") + " " + long, "web"),
+      (15L, long, "books"))
+    val dir = TestSpark.tmpDir("graft_inrow_fixture")
+    fixture.toDF("doc_id", "text", "source").withColumn("lang", lit("en"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+    cleaning(dir) {
+      Seq(dir, sfTiny).foreach { d =>
+        Seq("l5_text_quality" -> l5Ref _, "l16_decontaminate" -> l16Ref _,
+            "l17_pipeline_corpus_prep" -> l17Ref _).foreach { case (k, ref) =>
+          val got = rows(SparkEntry.queries(k)(spark, d))
+          assert(got == rows(ref(d)), s"$k differs from its explode → groupBy form at $d")
+        }
+      }
+      val hits = rows(SparkEntry.queries("l16_decontaminate")(spark, dir))
+        .map(r => r(0) -> r(1)).toMap
+      assert(hits(2L) == 2L && hits(6L) == 1L && hits(18L) == 0L, s"fixture drift: $hits")
+      val kept = rows(SparkEntry.queries("l17_pipeline_corpus_prep")(spark, dir)).map(_(1))
+      assert(kept.toSet == Set(1L, 12L, 13L, 14L), s"fixture drift: l17 kept $kept")
     }
   }
 }
