@@ -54,26 +54,29 @@ object LlmOps {
     * pin all reference one definition. */
   private[graft] object MinHashBands { val nBands = 12; val nRows = 2 }
 
-  /** The j2 candidate production over the minhash signature frame — split
-    * out (r19, VERDICT r18 task 2) so PlanShapeSpec can pin the band
-    * equi-join's physical shape (inside the key the verified pair frame
-    * is localCheckpointed, hiding this subtree from the key's plan).
-    * The band join shuffles only (doc_id, band, bval) — 24 bytes/row;
-    * shingle sets attach to the (few) candidates afterwards. The band
-    * value folds the band's r minhashes into one 64-bit key. */
-  private[graft] def minhashBandCandidatesRaw(sigs: DataFrame): DataFrame = {
+  /** j2's signature frame `(doc_id, sset, m0 … m23)`: each doc's hashed
+    * shingle set and its 24 minhashes, in one aggregation over the shared
+    * shingler (see [[shingleRows]]). Shingles hash to 8-byte tokens, so
+    * sets and minhashes never carry text. */
+  private[graft] def minhashSigs(s: SparkSession, d: String): DataFrame = {
     import MinHashBands.{nBands, nRows}
-    val banded = sigs.select(col("doc_id"),
-      posexplode(array((0 until nBands).map { b =>
-        xxhash64((0 until nRows).map(r => col(s"m${b * nRows + r}")): _*)
-      }: _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "bval"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    shingleRows(s, d)
+      .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
+      .groupBy("doc_id")
+      .agg(collect_set(col("sh")).as("sset"),
+        (0 until nBands * nRows)
+          .map(h => min(xxhash64(lit(h), col("sh"))).as(s"m$h")): _*)
+  }
+
+  /** j2's banding: one `(doc_id, band)` row per band, the band value
+    * folding the band's position and its r minhashes into one 64-bit key
+    * (equal minhashes in different band positions never collide). */
+  private[graft] def minhashBanded(sigs: DataFrame): DataFrame = {
+    import MinHashBands.{nBands, nRows}
+    sigs.select(col("doc_id"),
+      explode(array((0 until nBands).map { b =>
+        xxhash64(lit(b) +: (0 until nRows).map(r => col(s"m${b * nRows + r}")): _*)
+      }: _*)).as("band"))
   }
 
   /** DISTINCT word-3-gram shingles per document as `(doc_id, shingle)`
@@ -92,11 +95,13 @@ object LlmOps {
     * fat to store (hundreds of thousands of exploded string rows that
     * every consumer would have to deserialize). */
   private[graft] def shingleRows(s: SparkSession, d: String): DataFrame = {
+    // no `size(ws) >= 3` filter: `word_ngrams` is already `[]` under 3
+    // words (null for null text) and `explode` emits no row for either,
+    // while a filter on the words column would be pushed below this
+    // projection and tokenize every document twice
     t(s, d, "documents")
-      .select(col("doc_id"), words(lower(col("text"))).as("ws"))
-      .filter(size(col("ws")) >= 3)
-      .select(col("doc_id"),
-        explode(array_distinct(wordNgrams(col("ws"), 3))).as("shingle"))
+      .select(col("doc_id"), explode(array_distinct(
+        wordNgrams(words(lower(col("text"))), 3))).as("shingle"))
   }
 
   /** Row cap for the exact all-pairs baselines that `broadcast()` a whole
@@ -190,13 +195,96 @@ object LlmOps {
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id")), rounds)
   }
 
+  /* The near-dup pipeline shared by the dedup keys (j2, l1, l9, l12, l18,
+   * l22, l32, l50): a banding of the key's signature feeds [[bandPairs]];
+   * the candidates pass an exact verifier ([[verifyJaccard]] over
+   * [[candidateSets]], or the key's own metric); [[dupLedger]] or
+   * [[connectedComponents]] turns the verified pairs into clusters. */
+
+  /** Distinct candidate pairs `(a_id, b_id)`, `a_id < b_id`, of the docs
+    * that share a band: the band self-join over `(doc_id, band)` rows. It
+    * is an equi-join on `band`, so candidates are hash-partitioned by
+    * band, never an all-pairs scan, and each unordered pair is produced
+    * (and later verified) once. Every other column of `banded` rides
+    * along as `a_<col>` / `b_<col>`, so a gate on the signature itself
+    * (l1's Hamming distance) needs no join back; a pair can share several
+    * bands, and such a gate runs after the `distinct`, once per pair. */
+  def bandPairs(banded: DataFrame): DataFrame = {
+    val rides = banded.columns.filterNot(Set("doc_id", "band"))
+    banded.as("a")
+      .join(banded.as("b"),
+        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("a_id") +: col("b.doc_id").as("b_id") +:
+        rides.flatMap(c => Seq(col(s"a.$c").as(s"a_$c"), col(s"b.$c").as(s"b_$c"))): _*)
+      .distinct()
+  }
+
+  /** `(doc_id, sset)`: the full set of `shingle` values of every doc that
+    * appears in a candidate pair — sets materialise for candidate docs
+    * only, since near-dups are rare at corpus scale. Checkpointed: a
+    * verifier joins it under several aliases, which Spark would otherwise
+    * plan as as many rebuilds of the semi-join + `collect_set`. */
+  def candidateSets(cand: DataFrame, shing: DataFrame): DataFrame =
+    shing.join(
+        cand.select(col("a_id").as("doc_id"))
+          .union(cand.select(col("b_id"))).distinct(),
+        Seq("doc_id"), "left_semi")
+      .groupBy("doc_id").agg(collect_set(col("shingle")).as("sset"))
+      .localCheckpoint(eager = false)
+
+  /** Exact-Jaccard verification of candidate `(a_id, b_id)` pairs against
+    * `(doc_id, sset)` sets: keeps J ≥ 4/5 as `(a_id, b_id, jaccard)`. The
+    * threshold compares integers (5·common ≥ 4·union), so no float
+    * boundary can flip membership; jaccard is emitted with the portable
+    * §7.2 floor-round. The AllPairs length filter [Bayardo et al., WWW'07
+    * §3] — J ≥ 4/5 forces 5·min(|A|,|B|) ≥ 4·max(|A|,|B|) — drops
+    * size-mismatched pairs losslessly before the intersection. It runs on
+    * the attached sets: as two integer joins ahead of them it cost j2 one
+    * more job and made neither j2 nor l18 faster at sf0.1. */
+  def verifyJaccard(cand: DataFrame, sets: DataFrame): DataFrame =
+    cand
+      .join(sets.select(col("doc_id").as("a_id"), col("sset").as("sa")), "a_id")
+      .join(sets.select(col("doc_id").as("b_id"), col("sset").as("sb")), "b_id")
+      .filter(least(size(col("sa")), size(col("sb"))) * 5 >=
+        greatest(size(col("sa")), size(col("sb"))) * 4)
+      .withColumn("common", size(array_intersect(col("sa"), col("sb"))).cast(LongType))
+      .withColumn("uni", size(col("sa")) + size(col("sb")) - col("common"))
+      .filter(col("common") * 5 >= col("uni") * 4)
+      .select(col("a_id"), col("b_id"),
+        (floor(col("common").cast(DoubleType) / col("uni") * 1e4 + 0.5) / 1e4)
+          .as("jaccard"))
+
+  /** The dup ledger `(doc_id, cluster_id, n_dups)` over every id of `ids`
+    * from verified `a_id < b_id` pairs: `n_dups` counts a doc's verified
+    * neighbours and `cluster_id` is its [[connectedComponents]] label.
+    * The pairs are symmetrised in the row (one `explode` of both
+    * orientations, not a `union`, whose two branches would each re-run
+    * the verification) into one checkpointed edge list, which both the
+    * count and the closure read. */
+  def dupLedger(ids: DataFrame, pairs: DataFrame): DataFrame = {
+    val edges = pairs
+      .select(explode(array(struct(col("a_id"), col("b_id")),
+        struct(col("b_id").as("a_id"), col("a_id").as("b_id")))).as("e"))
+      .select("e.a_id", "e.b_id")
+      .localCheckpoint(eager = false)
+    val nDups = edges.groupBy(col("a_id").as("doc_id"))
+      .agg(count(lit(1)).as("n_dups"))
+    connectedComponents(ids, edges)._1
+      .join(nDups, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("cluster_id"),
+        coalesce(col("n_dups"), lit(0L)).as("n_dups"))
+  }
+
   val queries: Map[String, Q] = Map(
-    // exact dedup: keep min doc_id per sha256(text)
+    // exact dedup: keep min doc_id per sha256(text). The aggregate groups
+    // by the 32-byte binary digest, as l17 does: Spark plans no fast hash
+    // map for a binary key, so each task holds one 64 MB page, not two.
+    // The output digest is the same lowercase hex string.
     "j1_dedup_exact" -> ((s, d) =>
       t(s, d, "documents")
-        .groupBy(sha2(col("text"), 256).as("digest"))
+        .groupBy(unhex(sha2(col("text"), 256)).as("dig"))
         .agg(min(col("doc_id")).as("doc_id"))
-        .select("doc_id", "digest")
+        .select(col("doc_id"), lower(hex(col("dig"))).as("digest"))
         .orderBy("doc_id")),
 
     // near-duplicate clustering: the explicit shingle → minhash → band →
@@ -214,7 +302,7 @@ object LlmOps {
     // Banding is b=12 bands × r=2 minhash rows (24 minhashes/doc): a band
     // collides with p = J^2, so a true pair (J >= 0.8) is caught with
     // p = 1-(1-J²)^12 >= 1 - 4.7e-6, while the low-J noise that dominates
-    // candidate volume is crushed quadratically. The r=1 first cut
+    // candidate volume is crushed quadratically. An r=1 banding
     // (8 bands × 1 minhash) was MEASURED at sf0.1: the argmin of a single
     // minhash is a globally COMMON shingle for many docs, so buckets go
     // quadratic — 165,058 candidates for 512 true pairs, 164,544 of them
@@ -223,55 +311,22 @@ object LlmOps {
     // shingles — at 100 TB this is the difference between near-linear
     // banding and stop-word-bucket blowup. (Probe record in SURVEY §7.5.)
     //
-    // Built entirely from codegen'd columnar primitives (no ML-pipeline
-    // per-row UDFs): 24 minhashes per doc in ONE aggregation pass, band
-    // equi-join for candidates, then an EXACT Jaccard filter via
-    // array_intersect on the hashed shingle sets of candidates only.
-    // Scale story: candidates come from the equi-join on (band, value) —
-    // hash-partitioned, never an all-pairs scan; full shingle sets are
-    // only materialized for the few candidate docs, and the output is one
-    // row per doc, not the raw pair list.
+    // Built from codegen'd columnar primitives (no ML-pipeline per-row
+    // UDFs): 24 minhashes per doc in ONE aggregation pass, the shared
+    // band join for candidates, the shared exact verifier on the hashed
+    // shingle sets, and the shared dup ledger; the output is one row per
+    // doc, not the raw pair list.
     "j2_dedup_near_minhash" -> ((s, d) => {
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      // shared shingler (see shingleRows), hashed to 8-byte tokens so sets
-      // and minhashes never carry text
-      val shingles = shingleRows(s, d)
-        .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
-      import MinHashBands.{nBands, nRows}
-      // materialized once, consumed 4× below (both sides of the band
-      // self-join + the two candidate set lookups) — without it the whole
-      // shingle pipeline re-executes per consumer. localCheckpoint, NOT
-      // persist: persist registers the plan in the session CacheManager,
-      // which pins the blocks in executor memory for the life of the
-      // session (BASELINE.md's "each query must stand alone" rule);
-      // localCheckpoint blocks are released by the ContextCleaner as soon
-      // as the query's RDD is unreachable. At cluster scale this is the
-      // signature table you'd write once per corpus snapshot.
-      val sigs = shingles.groupBy("doc_id")
-        .agg(collect_set(col("sh")).as("set"),
-          (0 until nBands * nRows)
-            .map(h => min(xxhash64(lit(h), col("sh"))).as(s"m$h")): _*)
-        .localCheckpoint(eager = false)
-      val cand = minhashBandCandidatesRaw(sigs)
-      val pairs = cand
-        .join(sigs.select(col("doc_id").as("a_id"), col("set").as("sa")), "a_id")
-        .join(sigs.select(col("doc_id").as("b_id"), col("set").as("sb")), "b_id")
-        // exact Jaccard on the hashed shingle sets, candidates only —
-        // the same exact-integer 5·common >= 4·union thresholding as l9's
-        // kernel (no floating-point compare to disagree across engines)
-        .filter(size(array_intersect(col("sa"), col("sb"))) * 5 >=
-          size(array_union(col("sa"), col("sb"))) * 4)
-        .select("a_id", "b_id")
-        .localCheckpoint(eager = false) // consumed by n_dups AND the clustering
-      val nDups = pairs.groupBy(col("a_id").as("doc_id"))
-        .agg(count(lit(1)).as("n_dups"))
-      // cluster id: min doc_id of the connected component, so chain-shaped
-      // clusters (A~B~C with A≁C) get one consistent id
-      val clusters = connectedComponents(docs.select("doc_id"), pairs)._1
-      clusters.join(nDups, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster_id"),
-          coalesce(col("n_dups"), lit(0L)).as("n_dups"))
-        .orderBy("doc_id")
+      // materialized once: read by the band join and, under four aliases,
+      // by the verifier. localCheckpoint, NOT persist: persist registers
+      // the plan in the session CacheManager, which pins the blocks for
+      // the life of the session (BASELINE.md's "each query must stand
+      // alone" rule); the ContextCleaner releases localCheckpoint blocks
+      // once the query's RDD is unreachable. At cluster scale this is the
+      // signature table written once per corpus snapshot.
+      val sigs = minhashSigs(s, d).localCheckpoint(eager = false)
+      val pairs = verifyJaccard(bandPairs(minhashBanded(sigs)), sigs)
+      dupLedger(t(s, d, "documents").select("doc_id"), pairs).orderBy("doc_id")
     }),
 
     // exact top-20 cosine pairs (correctness baseline for ANN)

@@ -184,24 +184,21 @@ object TrainOps {
     * 8..15 big-endian as a signed long ≡ DuckDB's
     * `conv(substr(md5(s),17,16),16,-10)`) rather than xxhash64: md5 is
     * computable bit-identically by DuckDB, so the whole signature — and
-    * with it the entire l1 output — becomes oracle-checkable (the r14
-    * VERDICT task). Computed by the codegen'd [[graft.functions.Md5Low64]]
-    * (digest-bytes → long, no hex-string round-trip — ~6.5× the SQL
-    * chain, measured at its Scaladoc), so the oracle-motivated family
-    * switch costs ~nothing in the scan. Public, so a shell session can
-    * explain this signature subtree, which l1's own plan hides behind a
-    * checkpoint scan. */
+    * with it the entire l1 output — is oracle-checkable. Computed by the
+    * codegen'd [[graft.functions.Md5Low64]] (digest-bytes → long, no
+    * hex-string round-trip — ~6.5× the SQL chain, measured at its
+    * Scaladoc), so the oracle-motivated family costs ~nothing in the
+    * scan. Public, so a shell session can explain this signature
+    * subtree, which l1's own plan hides behind a checkpoint scan. */
   def simhashed(s: SparkSession, d: String): DataFrame =
     simhashVotes(LlmOps.tokens(s, d).select(col("doc_id"),
       graft.functions.Md5Low64.md5Low64(col("term")).as("h")))
 
   /** The packed per-bit majority vote over `(doc_id, h)` token-hash rows
-    * — split from [[simhashed]] (r22) so the spec can drive it with a
-    * synthetic ≥2^16-token doc, the envelope r21's 4×16-bit packing
-    * raised on. */
+    * — split from [[simhashed]] so the spec can drive it with a synthetic
+    * doc of more than 2^16 tokens. */
   private[graft] def simhashVotes(toks: DataFrame): DataFrame = {
-    // branch-free vote, PACKED 2-to-an-accumulator (r22, VERDICT r21
-    // task 1 — widened from r21's 4×16-bit packing): count the ONES per
+    // branch-free vote, PACKED 2-to-an-accumulator: count the ONES per
     // bit and test majority as 2·ones > n — identical signatures to the
     // ±1-vote form (a tie is a 0 bit either way; verified bit-for-bit at
     // sf0.1). Packing: lane j of packed sum p_j accumulates bits j and
@@ -212,11 +209,10 @@ object TrainOps {
     // n·(2^32+1)) stays below 2^63 — no ANSI overflow — while
     // n ≤ (2^63−1) div (2^32+1) = 2^31−2. That bound is UNREACHABLE for
     // a real document: n_tokens ≤ length(text), and a Spark string is
-    // < 2^31 chars — so unlike r21's 2^16 envelope (a long web page or
-    // concatenated code file genuinely exceeds 65536 tokens), no
-    // admissible input can hit this guard. It stays FAIL-LOUD anyway:
-    // an impossible-by-construction doc raises instead of silently
-    // corrupting lanes.
+    // < 2^31 chars — unlike a 4×16-bit packing's 2^16 envelope, which a
+    // long web page or concatenated code file genuinely exceeds. It
+    // stays FAIL-LOUD anyway: an impossible-by-construction doc raises
+    // instead of silently corrupting lanes.
     val fieldMask = lit(0x0000000100000001L)
     val packedOnes = (0 until 32).map { j =>
       sum(shiftrightunsigned(col("h"), j).bitwiseAND(fieldMask)).as(s"p$j")
@@ -234,57 +230,25 @@ object TrainOps {
       .select(col("doc_id"), (sig + overflowGuard).as("simhash"))
   }
 
-  /** The l1 pipeline over a signature frame: band-join candidates,
-    * Hamming-gate, n_dups + connected components, contract sort. */
-  private[graft] def l1Pipeline(rawSigs: DataFrame): DataFrame = {
-    // materialized once: consumed by the band join, the clustering's ids,
-    // and the final output join — the 64-bit-vote aggregation over every
-    // token is the expensive part and must not re-run per consumer
-    val sigs = rawSigs.localCheckpoint(eager = false)
-    val pairs = simhashBandPairsRaw(sigs)
-      .localCheckpoint(eager = false) // consumed by n_dups AND the clustering
-    val nDups = pairs.groupBy(col("a_id").as("doc_id"))
-      .agg(count(lit(1)).as("n_dups"))
-    val clusters = LlmOps.connectedComponents(sigs.select("doc_id"), pairs)._1
-    sigs.join(clusters, Seq("doc_id"))
-      .join(nDups, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("simhash"), col("cluster_id"),
-        coalesce(col("n_dups"), lit(0L)).as("n_dups"))
-      .orderBy("doc_id")
-  }
-
-  /** The l1 candidate-pair production over the (checkpointed) signature
-    * frame — split out (r19, VERDICT r18 task 2) so PlanShapeSpec can pin
-    * the band equi-join's physical shape: inside the key the resulting
-    * pair frame is localCheckpointed (it feeds n_dups AND the
-    * clustering), and a checkpoint scan hides this subtree from the key's
-    * executed plan. Band key = (16-bit signature slice)·4 + position, so
-    * equal slice values in different band positions never collide.
+  /** l1's banding: 4 × 16-bit signature slices, band key = slice·4 +
+    * position, so equal slice values in different positions never
+    * collide. The simhash rides along through [[LlmOps.bandPairs]] to the
+    * Hamming gate. Lossless for Hamming ≤ 3 by pigeonhole: 3 differing
+    * bits touch at most 3 of the 4 bands.
     *
-    * Stage order is MEASURED, not assumed (r17 A/B, SURVEY §7.5):
-    * distinct-THEN-gate wins over gate-then-distinct by ~8–13% at
-    * sf0.1 (3.90/3.95 s vs 4.14/4.51 s, same-interval alternation) —
-    * a banded pair surfaces in up to 4 bands, so pre-distinct gating
-    * evaluates bit_count per COLLISION while post-distinct evaluates
-    * it once per PAIR, and on this tiny-vocab corpus the Hamming gate
-    * is not selective enough to pay that back. (A token-LENGTH
-    * pre-filter — l9's idiom — is rejected on semantics, not cost:
-    * it is not lossless for Hamming-over-simhash, so it would change
-    * the oracled relation.) */
-  private[graft] def simhashBandPairsRaw(sigs: DataFrame): DataFrame = {
-    val banded = sigs.select(col("doc_id"), col("simhash"),
+    * The gate runs after the band join's distinct, as MEASURED (SURVEY
+    * §7.5): distinct-then-gate beat gate-then-distinct by ~8–13% at sf0.1
+    * (3.90/3.95 s vs 4.14/4.51 s, same-interval alternation) — a pair
+    * surfaces in up to 4 bands, so gating before the distinct evaluates
+    * bit_count per COLLISION rather than once per PAIR, and on this
+    * tiny-vocab corpus the gate is not selective enough to pay that back.
+    * (A token-LENGTH pre-filter — l9's idiom — is rejected on semantics,
+    * not cost: it is not lossless for Hamming-over-simhash.) */
+  private[graft] def simhashBanded(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), col("simhash"),
       explode(array((0 until 4).map(k =>
         shiftright(col("simhash"), k * 16).bitwiseAND(lit(0xFFFFL))
           * 4 + k): _*)).as("band"))
-    banded.as("a")
-      .join(banded.as("b"), col("a.band") === col("b.band") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.simhash").as("ha"), col("b.simhash").as("hb"))
-      .distinct()
-      .filter(expr("bit_count(ha ^ hb) <= 3"))
-      .select("a_id", "b_id")
-  }
 
   /** 128 fixed signed-random-projection hyperplanes for l12 (seeded —
     * signatures are reproducible across runs and engines running this
@@ -293,6 +257,32 @@ object TrainOps {
     val rnd = new scala.util.Random(0x5eedL)
     Array.fill(128)(Seq.fill(64)(rnd.nextGaussian().toFloat))
   }
+
+  /** l12's signature frame over a `(vec_id, embedding)` table:
+    * `(doc_id, embedding, norm, s0, s1)`, where `s0`/`s1` are the two
+    * 64-bit words of the 128-bit SRP signature (128 dot products per
+    * row). */
+  private[graft] def srpSigs(raw: DataFrame): DataFrame = {
+    // one 64-bit signature word: disjoint bits, so the sum assembles it
+    def sigWord(w: Int): Column =
+      (0 until 64).map { p =>
+        when(floatDot(col("embedding"), typedlit(srpPlanes(w * 64 + p))) > 0d,
+          lit(1L << p)).otherwise(lit(0L)): Column
+      }.reduce(_ + _)
+    raw.select(col("vec_id").as("doc_id"), col("embedding"),
+      sqrt(floatDot(col("embedding"), col("embedding"))).as("norm"),
+      sigWord(0).as("s0"), sigWord(1).as("s1"))
+  }
+
+  /** l12's banding: 8 × 16-bit slices of the SRP signature, band key =
+    * slice·8 + position. */
+  private[graft] def srpBanded(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"),
+      explode(array((0 until 8).map { k =>
+        val word = if (k < 4) col("s0") else col("s1")
+        // arithmetic >> then mask: the 16-bit band value, namespaced by k
+        shiftright(word, (k % 4) * 16).bitwiseAND(lit(0xFFFFL)) * 8 + k
+      }: _*)).as("band"))
 
   /** Embedding-cosine near-duplicate clustering over a `(vec_id,
     * embedding)` table — the vector-space member of the dedup family
@@ -304,61 +294,26 @@ object TrainOps {
     * bands, a pair at cosine ≥ 0.98 (θ ≤ 0.2 rad) collides in ≥ 1 band
     * with p ≈ 0.97, while a random pair (cos ≈ 0) collides with
     * p ≈ 8/2^16 — candidate fan-out is ~n²/2^16 per band, NOT n².
-    * Candidates then pass an EXACT cosine ≥ threshold check, and
-    * clusters are the connected components of the verified pairs
-    * ([[LlmOps.connectedComponents]]). Banding is approximate by design
+    * Candidates then pass an EXACT cosine ≥ threshold check, and the dup
+    * ledger clusters the verified pairs. Banding is approximate by design
     * (it can miss a pair near the threshold), but the exact-verify layer
-    * kills false positives, so since r15 the key is ORACLED against the brute-forced
-    * all-pairs ground truth (matches whenever recall is 1.0 on the
-    * corpus — see the l12 oracle's comment); TrainOpsSpec keeps the
-    * recall ≥ 0.9 pin against brute force on planted clusters plus
+    * kills false positives, so the key is ORACLED against the
+    * brute-forced all-pairs ground truth (matches whenever recall is 1.0
+    * on the corpus — see the l12 oracle's comment); TrainOpsSpec keeps
+    * the recall ≥ 0.9 pin against brute force on planted clusters plus
     * A~B~C chain closure. */
   private[graft] def embeddingNearDups(raw: DataFrame, threshold: Double): DataFrame = {
-    val e = raw.select(col("vec_id"), col("embedding"),
-      sqrt(floatDot(col("embedding"), col("embedding"))).as("norm"))
-    // one 64-bit signature word: disjoint bits, so the sum assembles it
-    def sigWord(w: Int): Column =
-      (0 until 64).map { p =>
-        when(floatDot(col("embedding"), typedlit(srpPlanes(w * 64 + p))) > 0d,
-          lit(1L << p)).otherwise(lit(0L)): Column
-      }.reduce(_ + _)
-    // 128 dot products per row — materialized ONCE (consumed by the band
-    // join twice, the exact check twice, and the output spine)
-    val sigs = e.select(col("vec_id"), col("embedding"), col("norm"),
-      sigWord(0).as("s0"), sigWord(1).as("s1"))
-      .localCheckpoint(eager = false)
-    val banded = sigs.select(col("vec_id"),
-      explode(array((0 until 8).map { k =>
-        val word = if (k < 4) col("s0") else col("s1")
-        // arithmetic >> then mask: the 16-bit band value, namespaced by k
-        shiftright(word, (k % 4) * 16).bitwiseAND(lit(0xFFFFL)) * 8 + k
-      }: _*)).as("band"))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-    val pairs = cand
-      .join(sigs.select(col("vec_id").as("a_id"),
+    // materialized ONCE: read by the band join, the exact check (twice)
+    // and the ledger's ids
+    val sigs = srpSigs(raw).localCheckpoint(eager = false)
+    val pairs = LlmOps.bandPairs(srpBanded(sigs))
+      .join(sigs.select(col("doc_id").as("a_id"),
         col("embedding").as("ea"), col("norm").as("na")), "a_id")
-      .join(sigs.select(col("vec_id").as("b_id"),
+      .join(sigs.select(col("doc_id").as("b_id"),
         col("embedding").as("eb"), col("norm").as("nb")), "b_id")
       .filter(floatDot(col("ea"), col("eb")) / (col("na") * col("nb")) >= threshold)
-      .select("a_id", "b_id")
-    // symmetric edge list: n_dups counts both ends of a pair; the
-    // clustering reads the same materialised rows
-    val edges = pairs
-      .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .localCheckpoint(eager = false)
-    val nDups = edges.groupBy(col("a_id").as("vec_id"))
-      .agg(count(lit(1)).as("n_dups"))
-    val clusters = LlmOps.connectedComponents(
-      sigs.select(col("vec_id").as("doc_id")), edges)._1
-    sigs.select("vec_id")
-      .join(clusters.withColumnRenamed("doc_id", "vec_id"), "vec_id")
-      .join(nDups, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cluster_id"),
-        coalesce(col("n_dups"), lit(0L)).as("n_dups"))
+    LlmOps.dupLedger(sigs.select("doc_id"), pairs)
+      .withColumnRenamed("doc_id", "vec_id")
       .orderBy("vec_id")
   }
 
@@ -386,10 +341,9 @@ object TrainOps {
       .select("doc_id", "shingle")
   }
 
-  /** The l22 containment pipeline over a (materialized) shingle frame —
-    * split from the key entry for the r22 share-vs-recompute A/B (the
-    * key passes its per-run localCheckpoint'd build; the plan and the
-    * comments are unchanged from the inline r21 form). */
+  /** The l22 containment pipeline over a (materialized) shingle frame:
+    * the probe side's prefixes join the full shingle index, and the
+    * candidates' sets come from the shared [[LlmOps.candidateSets]]. */
   private def containmentNgram(shing: DataFrame): DataFrame = {
     val cand = prefixIndex(shing, 9, 10).as("a")
       .join(shing.as("b"),
@@ -397,12 +351,7 @@ object TrainOps {
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       .distinct()
       .localCheckpoint(eager = false) // feeds the doc-id semi-join AND the output
-    val sets = shing.join(
-        cand.select(col("a_id").as("doc_id"))
-          .union(cand.select(col("b_id"))).distinct(),
-        Seq("doc_id"), "left_semi")
-      .groupBy("doc_id").agg(collect_set(col("shingle")).as("sset"))
-      .localCheckpoint(eager = false) // joined under two aliases below
+    val sets = LlmOps.candidateSets(cand, shing)
     // one-sided containment length filter (the verifyJaccard AllPairs
     // idea, asymmetric form): C(A→B) = |A∩B|/|A| ≥ 9/10 and
     // |A∩B| ≤ |B| force 10·|B| ≥ 9·|A| — size-incompatible candidates
@@ -424,26 +373,29 @@ object TrainOps {
       .orderBy("a_id", "b_id")
   }
 
-  /** l18's incremental-probe pipeline (split from the key entry for the
-    * r22 checkpoint-vs-stream A/B). The shingle frame here is NOT
-    * checkpointed (r22): unlike l22/l9, where it feeds prefixes AND
-    * verification, in THIS key the prefixes come from the session-shared
+  /** l18's incremental-probe pipeline. The shingle frame here is NOT
+    * checkpointed: unlike l22/l9, where it feeds prefixes AND
+    * verification, in this key the prefixes come from the session-shared
     * pref45 index and the shingle frame has a single consumer (the
-    * verification sets) — a checkpoint materialized the full exploded
+    * candidate sets) — a checkpoint would materialize the full exploded
     * frame (O(corpus shingles) of storage memory, guide §5) for one
-    * read, and the A/B measured streaming 9% faster (numbers at the
-    * key). */
+    * read, and streaming measured 9% faster (2.017 s vs 2.214 s,
+    * min-of-6 pass-interleaved at sf0.1). */
   private def l18Impl(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     val corpusIds = docs.filter(idBelow("e0")).select("doc_id")
     val delta = docs.filter(!idBelow("e0"))
-    val exact = delta.select(col("doc_id"), sha2(col("text"), 256).as("dig"))
+    // the digest is the 32-byte binary sha256, as in l17 and j1: Spark
+    // plans no fast hash map for a binary grouping key, so each task
+    // holds one 64 MB page, not two
+    def dig = unhex(sha2(col("text"), 256)).as("dig")
+    val exact = delta.select(col("doc_id"), dig)
       .join(docs.filter(idBelow("e0"))
-          .select(sha2(col("text"), 256).as("dig"), col("doc_id").as("c_id"))
+          .select(dig, col("doc_id").as("c_id"))
           .groupBy("dig").agg(min("c_id").as("exact_of")),
         Seq("dig"), "left")
       .select("doc_id", "exact_of")
-    val shing = LlmOps.shingleRows(s, d) // one tokenizer (j2/l9/l16)
+    val shing = LlmOps.shingleRows(s, d)
     // the persistent corpus artifact, built once per session — this key
     // times the incremental PROBE against it, not the index build
     val pref = sharedPrefix45(s, d)
@@ -454,7 +406,7 @@ object TrainOps {
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       .distinct()
       .localCheckpoint(eager = false)
-    val best = verifyJaccard(cand, shing)
+    val best = LlmOps.verifyJaccard(cand, LlmOps.candidateSets(cand, shing))
       // argmax via map-side max_by on (jaccard, -b_id), the l2/l3 idiom —
       // lexicographic max == (jaccard desc, b_id asc), the oracle's ordering
       .groupBy("a_id")
@@ -470,58 +422,15 @@ object TrainOps {
       .orderBy("doc_id")
   }
 
-  /** Exact-Jaccard verification of candidate `(a_id, b_id)` pairs: full
-    * shingle sets materialize for CANDIDATE docs only (near-dups are rare
-    * at corpus scale); threshold compares as integers (5·common ≥
-    * 4·union) so no float boundary can flip membership; jaccard emitted
-    * with the portable §7.2 floor-round. */
-  private def verifyJaccard(cand: DataFrame, shing: DataFrame): DataFrame = {
-    val sets = shing.join(
-        cand.select(col("a_id").as("doc_id"))
-          .union(cand.select(col("b_id"))).distinct(),
-        Seq("doc_id"), "left_semi")
-      .groupBy("doc_id").agg(collect_set(col("shingle")).as("sset"))
-      // materialized once: joined below under TWO aliases (a-side and
-      // b-side), which Spark otherwise plans as two full rebuilds of the
-      // semi-join + collect_set subtree
-      .localCheckpoint(eager = false)
-    // AllPairs LENGTH FILTER [Bayardo et al., WWW'07 §3]: J >= 4/5 forces
-    // 5·min(|A|,|B|) >= 4·max(|A|,|B|) (|A∩B| <= min, |A∪B| >= max), so
-    // size-mismatched candidates are pruned LOSSLESSLY on two tiny
-    // integer joins BEFORE the fat shingle sets attach — measured at
-    // sf0.1 the prefix join emits 118,826 candidates of which only
-    // 43,543 (37%) are length-compatible; at corpus scale this is the
-    // difference between shuffling set payloads for every prefix
-    // collision and only for plausible pairs.
-    val sizes = sets.select(col("doc_id"), size(col("sset")).as("n"))
-    val lenOk = cand
-      .join(sizes.select(col("doc_id").as("a_id"), col("n").as("na")), "a_id")
-      .join(sizes.select(col("doc_id").as("b_id"), col("n").as("nb")), "b_id")
-      .filter(least(col("na"), col("nb")) * 5 >=
-        greatest(col("na"), col("nb")) * 4)
-      .select("a_id", "b_id")
-    lenOk
-      .join(sets.select(col("doc_id").as("a_id"), col("sset").as("sa")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("sset").as("sb")), "b_id")
-      .withColumn("common", size(array_intersect(col("sa"), col("sb"))).cast(LongType))
-      .withColumn("uni", size(col("sa")) + size(col("sb")) - col("common"))
-      .filter(col("common") * 5 >= col("uni") * 4)
-      .select(col("a_id"), col("b_id"),
-        (floor(col("common").cast(DoubleType) / col("uni") * 1e4 + 0.5) / 1e4)
-          .as("jaccard"))
-  }
-
   /** The J ≥ 4/5 word-3-gram prefix index over the whole documents table
     * — THE persistent artifact of the incremental-dedup story (l18's own
-    * Scaladoc: "a stored corpus index" is what a nightly pipeline keeps,
+    * comment: "a stored corpus index" is what a nightly pipeline keeps,
     * the delta probe joins against it). Computed ONCE per (session,
-    * corpus) via [[Tables.sharedFrame]] (r17, VERDICT r16 task 3 — l18
-    * was rebuilding df + prefix ranks on every run, so its bench entry
-    * timed the index REBUILD instead of the incremental probe). The
-    * l9/l32 pair production keeps its own inline build inside the
-    * `l9pairs` memo (also once per session): PlanShapeSpec pins that
-    * subtree's candidate-join shape, which a checkpoint scan would
-    * hide. */
+    * corpus) via [[Tables.sharedFrame]], so l18's bench entry times the
+    * incremental probe, not an index rebuild. The l9/l32 pair production
+    * keeps its own inline build inside the `l9pairs` memo (also once per
+    * session): PlanShapeSpec pins that subtree's candidate-join shape,
+    * which a checkpoint scan would hide. */
   private def sharedPrefix45(s: SparkSession, d: String): DataFrame =
     sharedFrame(s, d, "pref45")(
       prefixIndex(LlmOps.shingleRows(s, d).localCheckpoint(eager = false), 4, 5))
@@ -529,25 +438,23 @@ object TrainOps {
   /** Verified exact-Jaccard pairs over word-3-gram shingles — the l9
     * PPJoin kernel's output `(a_id, b_id, jaccard)` at J >= 4/5,
     * computed ONCE per (session, corpus) via [[Tables.sharedFrame]] and
-    * shared by its two consumers: l9 REPORTS the pairs, l32 CLUSTERS
+    * shared by its consumers: l9 REPORTS the pairs, l32 and l50 CLUSTER
     * them. A production dedup pipeline materializes this frame exactly
-    * once and fans it out the same way (the r11 VERDICT trim lever). */
+    * once and fans it out the same way. */
   private def verifiedPairs(s: SparkSession, d: String): DataFrame =
     sharedFrame(s, d, "l9pairs")(verifiedPairsRaw(s, d))
 
   /** The un-memoized pair production — split out so PlanShapeSpec can pin
     * the candidate-join shape (the memoized frame's own plan is a
-    * checkpoint scan, which hides the producing subtree). */
+    * checkpoint scan, which hides the producing subtree). A prefix
+    * shingle is a band: the candidates are [[LlmOps.bandPairs]] over the
+    * prefix index. */
   private[graft] def verifiedPairsRaw(s: SparkSession, d: String): DataFrame = {
-    val shing = LlmOps.shingleRows(s, d) // shared with j2 — one tokenizer
+    val shing = LlmOps.shingleRows(s, d)
       .localCheckpoint(eager = false) // consumed by df, prefixes, verification
-    val pref = prefixIndex(shing, 4, 5)
-    val cand = pref.as("a").join(pref.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    val cand = LlmOps.bandPairs(prefixIndex(shing, 4, 5).withColumnRenamed("shingle", "band"))
       .localCheckpoint(eager = false) // feeds the doc-id semi-join AND the output
-    verifyJaccard(cand, shing)
+    LlmOps.verifyJaccard(cand, LlmOps.candidateSets(cand, shing))
   }
 
   /** Per-doc quality FEATURE frame `(doc_id, xq, xbi, xtri, xent)` —
@@ -823,14 +730,23 @@ object TrainOps {
 
   val queries: Map[String, Q] = Map(
     // l1: SimHash near-dedup — banded candidate join + Hamming <= 3 filter,
-    // transitive cluster rep like j2. ORACLED since r15: the token hash is
+    // transitive cluster rep like j2. ORACLED: the token hash is
     // md5-low-64 (see simhashed), which DuckDB computes bit-identically,
-    // and 4 × 16-bit banding is LOSSLESS for Hamming <= 3 by pigeonhole
-    // (3 differing bits can touch at most 3 of the 4 bands, so every
-    // qualifying pair shares >= 1 intact band) — the banded join is a pure
-    // optimization of all-pairs, and the oracle brute-forces it exactly.
-    // TrainOpsSpec additionally pins exact duplicates + pair sanity.
-    "l1_dedup_simhash" -> ((s, d) => l1Pipeline(simhashed(s, d))),
+    // and the 4 × 16-bit banding is LOSSLESS for Hamming <= 3 (see
+    // simhashBanded) — the banded join is a pure optimization of
+    // all-pairs, and the oracle brute-forces it exactly. TrainOpsSpec
+    // additionally pins exact duplicates, n_dups and the merge rate.
+    "l1_dedup_simhash" -> ((s, d) => {
+      // materialized once: read by the band join, the ledger's ids and the
+      // output — the 64-bit vote over every token must not re-run per
+      // consumer
+      val sigs = simhashed(s, d).localCheckpoint(eager = false)
+      val pairs = LlmOps.bandPairs(simhashBanded(sigs))
+        .filter(expr("bit_count(a_simhash ^ b_simhash) <= 3"))
+      sigs.join(LlmOps.dupLedger(sigs.select("doc_id"), pairs), "doc_id")
+        .select("doc_id", "simhash", "cluster_id", "n_dups")
+        .orderBy("doc_id")
+    }),
 
     // l2: embedding-space near-dup — per-vector nearest neighbour by
     // cosine + dup flag at 0.95. Exact all-pairs argmax is the correctness
@@ -1014,9 +930,9 @@ object TrainOps {
     // materializes full shingle sets for candidate docs only (near-dups
     // are rare at corpus scale). Threshold compares as integers
     // (5·common >= 4·union) so no float boundary can flip membership.
-    // Kernel shared with l18 (prefixIndex/verifyJaccard — change THERE
-    // only); here the candidate join is the a<b self-join over one
-    // prefix index.
+    // Kernel shared with l18 (prefixIndex, LlmOps.candidateSets and
+    // verifyJaccard — change THERE only); here the candidate join is
+    // LlmOps.bandPairs over one prefix index.
     "l9_dedup_ngram_jaccard" -> ((s, d) =>
       verifiedPairs(s, d).orderBy("a_id", "b_id")),
 
@@ -1155,8 +1071,7 @@ object TrainOps {
     }),
 
     // l12: embedding-cosine near-dup — SRP-LSH banded candidates, exact
-    // cosine >= 0.98, transitive cluster closure. Oracled since r15
-    // against the brute-forced all-pairs ground truth (the j2/l1
+    // cosine >= 0.98, transitive cluster closure. Oracled against the brute-forced all-pairs ground truth (the j2/l1
     // construction: the exact-verify layer makes false positives
     // impossible, and recall is 1.0 on this corpus — max pairwise cosine
     // 0.51, so every vector is its own cluster, the honest output);
@@ -1321,12 +1236,6 @@ object TrainOps {
     // corpus-only counts (refreshed on a slow cadence) and appends delta
     // prefixes under that frozen order; any one consistent order
     // preserves the prefix theorem, so results are identical either way.
-    // (shingle-checkpoint A/B, r22: temporary x_l18_ckpt/x_l18_nockpt
-    // twins, min-of-6 pass-interleaved same-interval at sf0.1 —
-    // checkpoint 2.214 s vs streaming 2.017 s (−9%). The checkpoint had
-    // a single consumer here, so it materialized the full exploded
-    // shingle frame for one read; removed. Twins deleted after the
-    // measurement; plans/r22/l18_ab_r22.json.)
     "l18_dedup_incremental" -> ((s, d) => l18Impl(s, d)),
 
     // l20: apply l15's source-mix weights — the MATERIALIZATION step of
@@ -1515,18 +1424,14 @@ object TrainOps {
     // canonical order) — hub shingles never enter a prefix, so the
     // candidate join is df(rare)-bounded, never corpus². Threshold as
     // integers (10·common ≥ 9·|A|); exact verification on candidates.
-    // r22 share-vs-recompute A/B (VERDICT r21 task 4), measured with a
-    // temporary `x_l22_shared` twin (containmentNgram over a sharedFrame'd
-    // shingle checkpoint), min-of-6 pass-interleaved same-interval at
-    // sf0.1: recompute 2.135 s vs shared 1.720 s warm + ~1.31 s one-time
-    // cold build (first-run 3.033 s). l22 is the checkpoint's ONLY
-    // consumer, so with the prime-entry accounting the shared form totals
-    // ~3.03 s vs 2.14 s — sharing LOSES. At scale it is also the wrong
+    // The shingle frame is a per-run checkpoint, not a session-shared one:
+    // l22 is its only consumer, and a shared copy measured slower in
+    // total at sf0.1 (2.14 s recompute vs 1.72 s warm + 1.31 s one-time
+    // build, min-of-6 pass-interleaved). At scale it is also the wrong
     // trade: the full shingle materialization is O(corpus tokens) of
-    // storage memory, while the per-run build streams (guide §5). Kept:
-    // per-run localCheckpoint'd build.
+    // storage memory, while the per-run build streams (guide §5).
     "l22_containment_ngram" -> ((s, d) =>
-      containmentNgram(LlmOps.shingleRows(s, d) // one tokenizer (j2/l9/l16/l18)
+      containmentNgram(LlmOps.shingleRows(s, d)
         .localCheckpoint(eager = false))), // feeds df, prefixes, verification
 
     // l19: sliding-window chunking — the long-document complement of

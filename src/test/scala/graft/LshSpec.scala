@@ -88,9 +88,9 @@ class LshSpec extends AnyFunSuite {
       "" + ('a' + i / 26).toChar + ('a' + i % 26).toChar
     def text(from: Int): String = (from until from + 50).map(tok).mkString(" ")
     val dir = Tables.scratch(spark, "lsh_chain_fixture", "docs")
-    Seq((0L, text(0)), (1L, text(5)), (2L, text(10)),
+    val texts = Seq((0L, text(0)), (1L, text(5)), (2L, text(10)),
       (99L, (100 until 150).map(tok).mkString(" ")))
-      .toDF("doc_id", "text")
+    texts.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = SparkEntry.queries("j2_dedup_near_minhash")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -98,5 +98,16 @@ class LshSpec extends AnyFunSuite {
     assert(rows(1) == (0L, 2L), s"B: ${rows(1)}")     // B~A, B~C
     assert(rows(2) == (0L, 1L), s"C: ${rows(2)}")     // C~B, but cluster id = A
     assert(rows(99L) == (99L, 0L), s"D: ${rows(99L)}") // unrelated stays alone
+    // n_dups = brute-force count of J >= 0.8 neighbours; A and B share
+    // several bands, so the pair must still count once per end
+    val sh = texts.map { case (id, txt) => id -> shingles(txt) }
+    sh.foreach { case (d, a) =>
+      val want = sh.count { case (e, b) =>
+        e != d && (a & b).size.toDouble / (a | b).size >= 0.8 }
+      assert(rows(d)._2 == want.toLong, s"doc $d: n_dups ${rows(d)._2} != $want")
+    }
+    val bands = operators.LlmOps.minhashBanded(operators.LlmOps.minhashSigs(spark, dir))
+      .collect().groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getLong(1)).toSet }
+    assert((bands(0L) & bands(1L)).size > 1, "A and B should collide in more than one band")
   }
 }

@@ -633,41 +633,30 @@ class PlanShapeSpec extends AnyFunSuite {
       s"a join survived into l42's final plan — per-round truncation lost:\n$p")
   }
 
-  test("l1: banded self-join keys on the 16-bit band; only signatures cross the shuffle") {
-    // the key's pair frame is checkpointed (it feeds n_dups and the
-    // closure loop), which hides the producing subtree from the key's
-    // plan — pin the extracted producer directly, composed exactly as
-    // the key composes it (signature frame checkpointed first)
-    val sigs = operators.TrainOps.simhashed(spark, sfTiny)
-      .localCheckpoint(eager = false)
-    val p = operators.TrainOps.simhashBandPairsRaw(sigs)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"l1's band join degenerated to all-pairs:\n$p")
-    val joinLine = p.linesIterator
-      .find(l => l.contains("SortMergeJoin") || l.contains("HashJoin"))
-      .getOrElse(fail(s"no equi join planned in l1's pair production:\n$p"))
-    assert(joinLine.contains("band"), s"band is not a join key: $joinLine")
-    // the shuffle carries (doc_id, simhash, band) — 24 bytes — never text
-    assert(!p.contains("text#"), s"document text crossed into the pair shuffle:\n$p")
-  }
-
-  test("j2: the minhash band join keys on (band, bval) — folded 64-bit band values") {
-    // the key's verified pair frame is checkpointed (it feeds n_dups and
-    // the closure loop), hiding the candidate subtree from the key's
-    // plan — pin the extracted producer over a signature-shaped frame
-    import org.apache.spark.sql.functions.col
-    val sigs = spark.range(50).select(col("id").as("doc_id") +:
-      (0 until 24).map(h => (col("id") * (h + 1)).as(s"m$h")): _*)
-    val p = operators.LlmOps.minhashBandCandidatesRaw(sigs)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"j2's band join degenerated to all-pairs:\n$p")
-    val joinLine = p.linesIterator
-      .find(l => (l.contains("SortMergeJoin") || l.contains("HashJoin")) &&
-        l.contains("bval"))
-      .getOrElse(fail(s"no equi join on the folded band value:\n$p"))
-    assert(joinLine.contains("band"), s"band position is not a join key: $joinLine")
+  test("bandPairs: the j2/l1/l12 band joins key on the band; only signatures cross the shuffle") {
+    // inside each key the verified pairs are checkpointed by the dup
+    // ledger, which hides the band join from the key's plan — pin the
+    // shared producer directly, fed by each key's own banding over its
+    // signature frame, checkpointed first as the keys do
+    import operators.{LlmOps, TrainOps}
+    val banded = Seq(
+      "j2" -> LlmOps.minhashBanded(
+        LlmOps.minhashSigs(spark, sfTiny).localCheckpoint(eager = false)),
+      "l1" -> TrainOps.simhashBanded(
+        TrainOps.simhashed(spark, sfTiny).localCheckpoint(eager = false)),
+      "l12" -> TrainOps.srpBanded(TrainOps.srpSigs(
+        Tables.t(spark, sfTiny, "embeddings")).localCheckpoint(eager = false)))
+    banded.foreach { case (k, b) =>
+      val p = LlmOps.bandPairs(b).queryExecution.executedPlan.toString
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$k's band join degenerated to all-pairs:\n$p")
+      val joinLine = p.linesIterator
+        .find(l => l.contains("SortMergeJoin") || l.contains("HashJoin"))
+        .getOrElse(fail(s"no equi join planned in $k's band join:\n$p"))
+      assert(joinLine.contains("[band#"), s"$k: band is not a join key: $joinLine")
+      // the shuffle carries ids, band values and signatures, never text
+      assert(!p.contains("text#"), s"$k: document text crossed into the pair shuffle:\n$p")
+    }
   }
 
   test("sharedFrame builds once per (session, dir, tag) — l18 times the probe, not the index build") {
@@ -723,6 +712,15 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("ReadSchema: struct<l_orderkey:bigint,l_linenumber:int," +
       "l_quantity:double,l_extendedprice:double>"),
       s"scan not pruned to the 4 base columns:\n$p")
+  }
+
+  test("shingleRows tokenizes each document once") {
+    // a filter on the words column would be pushed below the projection
+    // that makes it and evaluate words(lower(text)) a second time
+    val p = graft.operators.LlmOps.shingleRows(spark, sfTiny)
+      .queryExecution.executedPlan.toString
+    assert("words\\(".r.findAllMatchIn(p).size == 1,
+      s"shingleRows evaluates words(...) more than once per document:\n$p")
   }
 
   test("tokenizer sites plan no interpreted higher-order function") {

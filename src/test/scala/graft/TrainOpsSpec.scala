@@ -34,6 +34,21 @@ class TrainOpsSpec extends AnyFunSuite {
       assert(sig(x) == sig(y), s"identical texts $x/$y differ in simhash")
       assert(cluster(x) == cluster(y), s"identical texts $x/$y not clustered")
     }
+    // n_dups = the doc's verified neighbours (Hamming <= 3), brute-forced
+    // over the emitted signatures. An exact-dup pair has equal signatures,
+    // so it shares all 4 bands: a ledger that counted band collisions or
+    // both orientations of a pair would over-count it.
+    def bandsShared(a: Long, b: Long): Int =
+      (0 until 4).count(k => ((a >>> (16 * k)) & 0xFFFFL) == ((b >>> (16 * k)) & 0xFFFFL))
+    assert(dupPairs.exists { case (x, y) => bandsShared(sig(x), sig(y)) > 1 },
+      "fixture should hold a pair that collides in more than one band")
+    val sigs = rows.map(_.getLong(1))
+    rows.indices.foreach { i =>
+      val want = sigs.indices.count(j =>
+        j != i && java.lang.Long.bitCount(sigs(i) ^ sigs(j)) <= 3)
+      assert(rows(i).getLong(3) == want,
+        s"doc ${rows(i).getLong(0)}: n_dups ${rows(i).getLong(3)} != $want verified neighbours")
+    }
     // Degeneracy BAND (r17, VERDICT r16 task 6 — a one-sided <40% bound
     // was a materially weaker anti-collapse guard): the merge rate is
     // hash-family-calibrated — this corpus draws ~50-token docs from a
@@ -140,6 +155,25 @@ class TrainOpsSpec extends AnyFunSuite {
       rows.map { case (id, v) => Row(id, v) }.asJava, schema)
     val out = operators.TrainOps.embeddingNearDups(df, 0.98).collect()
     val cluster = out.map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+    // n_dups = the vector's verified neighbours (cosine >= 0.98 with the
+    // kernel's float-widening dot), brute-forced; a planted pair sharing
+    // several bands must still count once
+    val bands = operators.TrainOps.srpBanded(operators.TrainOps.srpSigs(df))
+      .collect().groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getLong(1)).toSet }
+    assert((0 until 20).exists(k => (bands(1000L + 2 * k) & bands(1001L + 2 * k)).size > 1),
+      "fixture should hold a pair that collides in more than one band")
+    def dot(a: Seq[Float], b: Seq[Float]): Double =
+      a.indices.foldLeft(0d)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
+    val vecs = rows.toMap
+    out.foreach { r =>
+      val v = vecs(r.getLong(0))
+      val want = vecs.count { case (id, w) =>
+        id != r.getLong(0) && dot(v, w) / (math.sqrt(dot(v, v)) * math.sqrt(dot(w, w))) >= 0.98
+      }
+      assert(r.getLong(2) == want,
+        s"vec ${r.getLong(0)}: n_dups ${r.getLong(2)} != $want verified neighbours")
+    }
 
     // chain closure: A~B and B~C must put A and C in ONE cluster even
     // though cos(A,C) < threshold
