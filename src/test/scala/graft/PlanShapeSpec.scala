@@ -633,30 +633,44 @@ class PlanShapeSpec extends AnyFunSuite {
       s"a join survived into l42's final plan — per-round truncation lost:\n$p")
   }
 
-  test("bandPairs: the j2/l1/l12 band joins key on the band; only signatures cross the shuffle") {
-    // inside each key the verified pairs are checkpointed by the dup
-    // ledger, which hides the band join from the key's plan — pin the
-    // shared producer directly, fed by each key's own banding over its
-    // signature frame, checkpointed first as the keys do
-    import operators.{LlmOps, TrainOps}
-    val banded = Seq(
-      "j2" -> LlmOps.minhashBanded(
-        LlmOps.minhashSigs(spark, sfTiny).localCheckpoint(eager = false)),
-      "l1" -> TrainOps.simhashBanded(
-        TrainOps.simhashed(spark, sfTiny).localCheckpoint(eager = false)),
-      "l12" -> TrainOps.srpBanded(TrainOps.srpSigs(
-        Tables.t(spark, sfTiny, "embeddings")).localCheckpoint(eager = false)))
-    banded.foreach { case (k, b) =>
-      val p = LlmOps.bandPairs(b).queryExecution.executedPlan.toString
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-        s"$k's band join degenerated to all-pairs:\n$p")
-      val joinLine = p.linesIterator
-        .find(l => l.contains("SortMergeJoin") || l.contains("HashJoin"))
-        .getOrElse(fail(s"no equi join planned in $k's band join:\n$p"))
-      assert(joinLine.contains("[band#"), s"$k: band is not a join key: $joinLine")
-      // the shuffle carries ids, band values and signatures, never text
-      assert(!p.contains("text#"), s"$k: document text crossed into the pair shuffle:\n$p")
-    }
+  // inside each near-dup key the verified pairs are checkpointed by the
+  // dup ledger, which hides the band join from the key's plan — the pins
+  // below check the shared producer LlmOps.bandPairs directly, fed by the
+  // key's own banding over its signature frame, checkpointed first as the
+  // keys do
+  private def assertBandJoin(k: String, banded: org.apache.spark.sql.DataFrame): Unit = {
+    val p = operators.LlmOps.bandPairs(banded).queryExecution.executedPlan.toString
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"$k's band join degenerated to all-pairs:\n$p")
+    val joinLine = p.linesIterator
+      .find(l => l.contains("SortMergeJoin") || l.contains("HashJoin"))
+      .getOrElse(fail(s"no equi join planned in $k's band join:\n$p"))
+    assert(joinLine.contains("[band#"), s"$k: band is not a join key: $joinLine")
+    // the shuffle carries ids, band values and signatures, never text
+    assert(!p.contains("text#"), s"$k: document text crossed into the pair shuffle:\n$p")
+  }
+
+  test("l1: banded self-join keys on the 16-bit band; only signatures cross the shuffle") {
+    import operators.TrainOps
+    assertBandJoin("l1", TrainOps.simhashBanded(
+      TrainOps.simhashed(spark, sfTiny).localCheckpoint(eager = false)))
+  }
+
+  test("j2: the minhash band join keys on (band, bval) — folded 64-bit band values") {
+    // the band position and its r minhashes fold into the one 64-bit
+    // `band` key, so the (band, bval) pair is a single equi-join column
+    import operators.LlmOps
+    val banded = LlmOps.minhashBanded(
+      LlmOps.minhashSigs(spark, sfTiny).localCheckpoint(eager = false))
+    assert(banded.schema("band").dataType == org.apache.spark.sql.types.LongType,
+      s"j2's band key is not a folded 64-bit value: ${banded.schema("band")}")
+    assertBandJoin("j2", banded)
+  }
+
+  test("l12: the SRP band join keys on the band; only signatures cross the shuffle") {
+    import operators.TrainOps
+    assertBandJoin("l12", TrainOps.srpBanded(TrainOps.srpSigs(
+      Tables.t(spark, sfTiny, "embeddings")).localCheckpoint(eager = false)))
   }
 
   test("sharedFrame builds once per (session, dir, tag) — l18 times the probe, not the index build") {
